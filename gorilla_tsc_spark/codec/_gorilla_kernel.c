@@ -1,18 +1,18 @@
 /* Native fast path for the v2 Gorilla block codec (last-value predictor).
  *
- * Same format state machine as codec/fastdecode.py::decode_payload
+ * Same format state machine as codec/gorilla.py::GorillaDecoder
  * (GorillaDecompressor.java:42-112 + ValueDecompressor.java:32-54
  * re-expressed): 64-bit big-endian header timestamp, 27-bit first
  * delta (0x7FFFFFF = empty), dod bucket codes 0/10/110/1110/1111 with
  * 7/9/12/32-bit payloads (32-bit 0xFFFFFFFF terminates), value XOR
  * with leading/trailing window reuse (2-bit control, 5+7-bit header
  * packed as 12).  Bit-exactness is proven by tests/test_native_kernel.py
- * against the golden-vector-validated Python decoders.
+ * against the golden reference words and the scalar Python codec.
  *
  * The entry points are BATCH calls: one invocation decodes (or encodes)
  * every block in an Arrow batch, so per-call overhead vanishes.
  * Compiled lazily by codec/native.py via cc -O2 -shared; absence of a
- * compiler falls back to the NumPy/Python kernels.
+ * compiler falls back, with a warning, to the scalar Python codec.
  */
 #include <stdint.h>
 #include <stdlib.h>

@@ -1,37 +1,20 @@
-"""Partition-level batch Gorilla encoder: encodes MANY blocks in one
-vectorized pass.
+"""Partition-level entry points of the v2 codec: every engine encode
+and decode goes through ``encode_partition`` / ``decode_partition``.
 
-``encode_block`` (codec/gorilla.py) pays ~200µs of NumPy fixed cost per
-block — fatal when a Spark partition holds tens of thousands of small
-(conv, day) groups. This kernel amortizes everything across the whole
-partition and keeps Python-object churn near zero (allocation storms
-from boxed ints are what stop 32 concurrent Arrow workers from
-scaling):
-
-- delta-of-delta, zigzag, dod bucket codes, XOR chain and exact lz/tz
-  run ONCE over the full point arrays (group boundaries via masks);
-- the only sequential state — the leading/trailing window reuse
-  decision (ValueCompressor.java:41-52) — is a lean Python loop over
-  ONLY the nonzero-XOR points, appending small (≤64) ints that CPython
-  interns, so it allocates almost nothing;
-- every field (value, width) is then laid out in fixed per-row slots of
-  NumPy arrays (width-0 slots pack to nothing) and bit-packed in ONE
-  global scatter with word-aligned per-block offsets.
-
-Output payloads are bit-identical to feeding each group through
-``encode_block`` / the reference ``GorillaCompressor`` +
-``LongArrayOutput`` byte view (tests/test_batch_encode.py proves
-equality against the golden-vector-validated scalar path).
+Both hand the whole partition to the native C kernel (codec/native.py)
+in one call.  When the kernel is not loaded they run the scalar
+reference codec (codec/gorilla.py) block by block — bit-identical and
+the source of truth the golden fixtures pin, but 50-800x slower, so
+the first such call in a process logs a warning.  The two paths share
+one error contract: a payload that does not decode to exactly its
+block's ``expected`` point count raises the same ``ValueError``.
 """
 from __future__ import annotations
 
 import numpy as np
 
-from .bits import U64, clz64, ctz64
-from .gorilla import FIRST_DELTA_BITS
-
-_U32 = (1 << 32) - 1
-_MASK27 = (1 << FIRST_DELTA_BITS) - 1
+from . import native
+from .gorilla import GorillaDecoder, dfcm_table_size, encode_block
 
 
 def group_runs(key: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -48,29 +31,21 @@ def group_runs(key: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 def encode_partition(starts: np.ndarray, counts: np.ndarray,
                      block_ts: np.ndarray, ts: np.ndarray,
                      vbits: np.ndarray, predictor: str | None = None):
-    """Encode every group in one pass — native C kernel when available
-    (codec/native.py, bit-identical, ~50× faster inner loop), else the
-    vectorized NumPy path below (last-value) or the scalar reference
-    codec (custom predictors: the XOR chain depends on the prediction,
-    so it cannot be pre-vectorized)."""
-    from . import native
-    from .gorilla import dfcm_table_size
-    pred_size = dfcm_table_size(predictor)
+    """Encode every group of a partition.
+
+    starts/counts: group runs (monotone, contiguous, cover all rows).
+    block_ts: per-group 64-bit block header timestamp.
+    ts: int64 per-row timestamps (in-group ascending).
+    vbits: uint64 per-row raw value words.
+
+    Returns (payloads: list[bytes], n_bits: int64[G]).
+    """
+    pred_size = dfcm_table_size(predictor)  # validates the spec
     res = native.encode_many(starts, counts, block_ts, ts, vbits,
                              pred_size=pred_size)
     if res is not None:
         return res
-    if pred_size:
-        return _encode_scalar_runs(starts, counts, block_ts, ts, vbits,
-                                   predictor)
-    return encode_partition_numpy(starts, counts, block_ts, ts, vbits)
-
-
-def _encode_scalar_runs(starts, counts, block_ts, ts, vbits,
-                        predictor: str | None):
-    """Per-block scalar fallback for custom predictors (reference
-    implementation; bit-identical to the native DFCM path)."""
-    from .gorilla import encode_block
+    native.warn_fallback()
     payloads: list[bytes] = []
     nbits = np.empty(len(starts), dtype=np.int64)
     for i in range(len(starts)):
@@ -83,173 +58,38 @@ def _encode_scalar_runs(starts, counts, block_ts, ts, vbits,
     return payloads, nbits
 
 
-def encode_partition_numpy(starts: np.ndarray, counts: np.ndarray,
-                           block_ts: np.ndarray, ts: np.ndarray,
-                           vbits: np.ndarray):
-    """Encode every group in one pass.
+def decode_partition(payloads: list[bytes], expected: np.ndarray,
+                     predictor: str | None = None):
+    """Decode many payloads → (ts int64, vbits uint64, counts int64),
+    the points of all blocks concatenated in payload order.
 
-    starts/counts: group runs (monotone, contiguous, cover all rows).
-    block_ts: per-group 64-bit block header timestamp.
-    ts: int64 per-row timestamps (in-group ascending).
-    vbits: uint64 per-row raw value words.
-
-    Returns (payloads: list[bytes], n_bits: int64[G]).
+    ``expected`` (per-block point counts from block metadata) bounds
+    each block: decoding past it, or ending short of it, raises
+    ``ValueError`` on both paths.
     """
-    n = len(ts)
-    G = len(starts)
-    if n == 0:
-        return [], np.zeros(0, np.int64)
-    ts = np.asarray(ts, dtype=np.int64)
-    vbits = np.asarray(vbits, dtype=np.uint64)
-    starts = np.asarray(starts, dtype=np.int64)
-    counts = np.asarray(counts, dtype=np.int64)
-    block_ts = np.asarray(block_ts, dtype=np.int64)
-
-    is_first = np.zeros(n, dtype=bool)
-    is_first[starts] = True
-
-    # --- timestamps: per-row live delta (storedDelta == previous row's
-    # actual delta; dod==0 keeps them equal, so the chain is exact) ---
-    delta = np.empty(n, dtype=np.int64)
-    delta[0] = 0
-    delta[1:] = ts[1:] - ts[:-1]
-    first_delta = (ts[starts] - block_ts).astype(np.int32).astype(np.int64)
-    delta = delta.astype(np.int32).astype(np.int64)
-    delta[starts] = first_delta
-    prev_delta = np.empty(n, dtype=np.int64)
-    prev_delta[1:] = delta[:-1]
-    prev_delta[0] = 0
-    dod = (delta - prev_delta).astype(np.int32).astype(np.int64)
-    zz = (((dod << 1) ^ (dod >> 31)).astype(np.uint32).astype(np.int64) - 1) & _U32
-    small = zz >= 1
-    ts_code = np.select(
-        [dod == 0, small & (zz < 128), small & (zz < 512), small & (zz < 4096)],
-        [0, (0x02 << 7) | zz, (0x06 << 9) | zz, (0x0E << 12) | zz],
-        default=(0x0F << 32) | zz,
-    ).astype(np.uint64)
-    ts_width = np.select(
-        [dod == 0, small & (zz < 128), small & (zz < 512), small & (zz < 4096)],
-        [1, 9, 12, 16], default=36,
-    ).astype(np.int64)
-
-    # --- values: XOR vs previous row, exact lz/tz ---
-    xor = np.empty(n, dtype=np.uint64)
-    xor[1:] = vbits[1:] ^ vbits[:-1]
-    xor[0] = 0
-    xor[starts] = 0  # first rows emit raw value, not xor
-    lz_a = clz64(xor)
-    tz_a = ctz64(xor)
-
-    nz_mask = (xor != 0)  # implies not first
-    nz_idx = np.flatnonzero(nz_mask)
-
-    # --- sequential window chain over nonzero-XOR points only ---
-    pos = np.searchsorted(nz_idx, starts).tolist() + [len(nz_idx)]
-    lz_nz = lz_a[nz_idx].tolist()
-    tz_nz = tz_a[nz_idx].tolist()
-    new_l: list[int] = []
-    sig_l: list[int] = []
-    shf_l: list[int] = []
-    na, sa, ha = new_l.append, sig_l.append, shf_l.append
-    for g in range(G):
-        slz = 1 << 30
-        stz = 0
-        for k in range(pos[g], pos[g + 1]):
-            lz = lz_nz[k]
-            tz = tz_nz[k]
-            if lz >= slz and tz >= stz:
-                na(0)
-                sa(64 - slz - stz)
-                ha(stz)
-            else:
-                na(1)
-                sa(64 - lz - tz)
-                ha(tz)
-                slz = lz
-                stz = tz
-    use_new = np.array(new_l, dtype=bool)
-    em_sig = np.array(sig_l, dtype=np.int64)
-    em_shf = np.array(shf_l, dtype=np.uint64)
-
-    # --- field slot construction: 3 slots per row + 3 per terminator ---
-    V3 = np.zeros((n, 3), dtype=np.uint64)
-    W3 = np.zeros((n, 3), dtype=np.int64)
-    others = ~is_first
-    # slot 0: block header (first row) / ts code
-    V3[starts, 0] = block_ts.astype(np.uint64)
-    W3[starts, 0] = 64
-    V3[others, 0] = ts_code[others]
-    W3[others, 0] = ts_width[others]
-    # slot 1: first delta / value control
-    V3[starts, 1] = (first_delta & _MASK27).astype(np.uint64)
-    W3[starts, 1] = FIRST_DELTA_BITS
-    z_mask = others & ~nz_mask
-    W3[z_mask, 1] = 1  # single 0 bit for xor==0
-    lz_nz_a = lz_a[nz_idx]
-    hdr = np.where(
-        use_new,
-        np.uint64(0b11 << 12) | (lz_nz_a.astype(np.uint64) << np.uint64(6))
-        | ((em_sig - 1).astype(np.uint64) & np.uint64(0x3F)),
-        np.uint64(0b10))
-    V3[nz_idx, 1] = hdr
-    W3[nz_idx, 1] = np.where(use_new, 14, 2)
-    # slot 2: first raw value / meaningful xor bits
-    V3[starts, 2] = vbits[starts]
-    W3[starts, 2] = 64
-    V3[nz_idx, 2] = xor[nz_idx] >> em_shf
-    W3[nz_idx, 2] = em_sig
-
-    # --- flatten with 3 terminator fields after each group ---
-    gid = np.repeat(np.arange(G, dtype=np.int64), counts)
-    F_total = 3 * n + 3 * G
-    V = np.zeros(F_total, dtype=np.uint64)
-    W = np.zeros(F_total, dtype=np.int64)
-    row_off = 3 * np.arange(n, dtype=np.int64) + 3 * gid
-    idx3 = row_off[:, None] + np.arange(3, dtype=np.int64)
-    V[idx3] = V3
-    W[idx3] = W3
-    term_off = 3 * (starts + counts) + 3 * np.arange(G, dtype=np.int64)
-    V[term_off] = 0x0F
-    W[term_off] = 4
-    V[term_off + 1] = 0xFFFFFFFF
-    W[term_off + 1] = 32
-    # third terminator field: one 0 bit
-    W[term_off + 2] = 1
-
-    # --- global packing: word-aligned block offsets, one scatter ---
-    cumw = np.cumsum(W)
-    # field index where each block starts: 3*starts + 3*arange(G)
-    blk_fstart = 3 * starts + 3 * np.arange(G, dtype=np.int64)
-    bit_base = np.where(blk_fstart > 0, cumw[blk_fstart - 1], 0)
-    blk_fend = term_off + 2  # inclusive last field of block
-    block_bits = cumw[blk_fend] - bit_base
-    block_words = (block_bits + 63) // 64
-    word_off = np.concatenate(([0], np.cumsum(block_words)))
-    fields_per_block = 3 * counts + 3
-    blk = np.repeat(np.arange(G, dtype=np.int64), fields_per_block)
-
-    local_start = (cumw - W) - bit_base[blk]
-    gstart = word_off[blk] * 64 + local_start
-
-    word = (gstart >> 6).astype(np.int64)
-    avail = 64 - (gstart & 63)
-    shift = avail - W
-    # W==64 fields are already full-width; mask others to declared width
-    wmod = np.where(W >= 64, 0, W).astype(np.uint64)
-    mask = np.where(W >= 64, np.uint64(U64), (np.uint64(1) << wmod) - np.uint64(1))
-    V &= mask
-    part1 = np.where(shift >= 0, V << np.maximum(shift, 0).astype(np.uint64),
-                     V >> np.maximum(-shift, 0).astype(np.uint64))
-    buf = np.zeros(int(word_off[-1]) + 1, dtype=np.uint64)
-    np.bitwise_or.at(buf, word, part1)
-    spans = shift < 0
-    if spans.any():
-        rem = (-shift[spans]).astype(np.uint64)
-        np.bitwise_or.at(buf, word[spans] + 1,
-                         V[spans] << (np.uint64(64) - rem))
-
-    allbytes = buf.byteswap().tobytes()
-    nbytes = ((block_bits + 7) // 8).tolist()
-    off_l = (word_off[:-1] * 8).tolist()
-    payloads = [allbytes[o:o + nb] for o, nb in zip(off_l, nbytes)]
-    return payloads, block_bits
+    pred_size = dfcm_table_size(predictor)  # validates the spec
+    res = native.decode_many(payloads, expected, pred_size=pred_size)
+    if res is not None:
+        return res
+    native.warn_fallback()
+    expected = np.asarray(expected, dtype=np.int64)
+    ts_parts, vb_parts = [], []
+    for i, p in enumerate(payloads):
+        exp = int(expected[i])
+        try:
+            # zero pad like the kernel's buffer: a truncated payload
+            # reads zeros (dod=0 repeats) until it overruns `exp`
+            t, v = GorillaDecoder(bytes(p) + b"\x00" * 16,
+                                  predictor).read_all(limit=exp + 1)
+        except IndexError:
+            raise ValueError(native.DECODE_OVERFLOW.format(i)) from None
+        if len(t) > exp:
+            raise ValueError(native.DECODE_OVERFLOW.format(i))
+        ts_parts.append(t)
+        vb_parts.append(v)
+    counts = np.array([len(t) for t in ts_parts], dtype=np.int64)
+    if not np.array_equal(counts, expected):
+        raise ValueError(native.DECODE_MISMATCH)
+    if not payloads:
+        return np.zeros(0, np.int64), np.zeros(0, np.uint64), counts
+    return np.concatenate(ts_parts), np.concatenate(vb_parts), counts

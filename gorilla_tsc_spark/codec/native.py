@@ -1,22 +1,24 @@
-"""Optional native (C) fast path for the v2 codec hot loops.
+"""Native (C) kernel for the v2 codec hot loops.
 
 The DataFrame plan is unchanged — this only swaps the per-partition
 kernel's inner loop, exactly like Spark's own Tungsten/Arrow native
 layers.  ``_gorilla_kernel.c`` is compiled lazily with the system C
-compiler into a source-hash-keyed ``.so`` under the temp dir (one
-compile per node, every executor process dlopens the cached artifact);
-any failure — no compiler, sandboxed filesystem — silently falls back
-to the NumPy/Python kernels, which remain the reference implementation
-and the source of truth for bit-exactness
-(tests/test_native_kernel.py proves C ≡ Python on golden vectors and
-random corpora).
+compiler into a source-hash-keyed ``.so`` in a private per-user cache
+directory (one compile per node, every executor process dlopens the
+cached artifact).  tests/test_native_kernel.py pins it to the golden
+reference words and to the scalar reference codec (codec/gorilla.py).
 
-Set ``GORILLA_NATIVE=0`` to disable.
+When the kernel cannot be built or loaded — no compiler, sandboxed
+filesystem — ``get_lib`` returns None and keeps the reason, and the
+engine's entry points (codec/batch.py) run the scalar reference
+instead, logging ONE warning per process (``warn_fallback``): that
+path is 50-800x slower, so it must be visible, never silent.
 """
 from __future__ import annotations
 
 import ctypes
 import hashlib
+import logging
 import os
 import subprocess
 import tempfile
@@ -27,6 +29,14 @@ _SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                     "_gorilla_kernel.c")
 _LIB = None
 _TRIED = False
+_WHY: str | None = None     # why the kernel is not loaded
+_WARNED = False
+
+# decode errors; the scalar reference path (codec/batch.py) raises the
+# same ones so callers see one contract
+DECODE_OVERFLOW = ("decode overflow at block {}: decoded past its "
+                   "n_points metadata (corrupt or truncated payload)")
+DECODE_MISMATCH = "decode count mismatch vs block metadata"
 
 
 def _read_src() -> bytes | None:
@@ -93,13 +103,15 @@ def _safe_artifact(path: str) -> bool:
             and not (st.st_mode & 0o022))
 
 
-def _build() -> str | None:
+def _build() -> str:
+    """Path of the compiled kernel; raises RuntimeError with the reason
+    when it cannot be built."""
     src = _read_src()
     if src is None:
-        return None
+        raise RuntimeError("kernel source _gorilla_kernel.c not readable")
     cache = _cache_dir()
     if cache is None:
-        return None
+        raise RuntimeError("no private cache directory for the kernel")
     tag = hashlib.sha256(src).hexdigest()[:16]
     so = os.path.join(cache, f"gorilla_kernel_{tag}.so")
     if _safe_artifact(so):
@@ -113,33 +125,33 @@ def _build() -> str | None:
             f.write(src)
         os.replace(ctmp, cpath)
     tmp = so + f".{os.getpid()}.tmp"
+    errors = []
     for cc in ("cc", "gcc", "clang"):
         try:
             r = subprocess.run(
                 [cc, "-O2", "-shared", "-fPIC", "-o", tmp, cpath],
                 capture_output=True, timeout=120)
-        except (OSError, subprocess.TimeoutExpired):
+        except (OSError, subprocess.TimeoutExpired) as e:
+            errors.append(f"{cc}: {e}")
             continue
         if r.returncode == 0:
             os.replace(tmp, so)  # atomic: concurrent builders converge
             return so
-    return None
+        errors.append(f"{cc}: {r.stderr.decode(errors='replace').strip()}")
+    raise RuntimeError(
+        "no C compiler built the kernel (" + "; ".join(errors) + ")")
 
 
 def get_lib():
-    """The loaded kernel library, or None (fallback to Python)."""
-    global _LIB, _TRIED
+    """The loaded kernel library, or None (the reason kept in _WHY)."""
+    global _LIB, _TRIED, _WHY
     if _TRIED:
         return _LIB
     _TRIED = True
-    if os.environ.get("GORILLA_NATIVE", "1") == "0":
-        return None
-    so = _build()
-    if so is None:
-        return None
     try:
-        lib = ctypes.CDLL(so)
-    except OSError:
+        lib = ctypes.CDLL(_build())
+    except (OSError, RuntimeError) as e:
+        _WHY = str(e)
         return None
     i64p = ctypes.POINTER(ctypes.c_int64)
     u64p = ctypes.POINTER(ctypes.c_uint64)
@@ -179,6 +191,18 @@ def get_lib():
     return _LIB
 
 
+def warn_fallback() -> None:
+    """Log, once per process, that the scalar reference codec runs in
+    place of the kernel."""
+    global _WARNED
+    if _WARNED:
+        return
+    _WARNED = True
+    logging.getLogger(__name__).warning(
+        "native Gorilla kernel unavailable (%s); running the scalar "
+        "reference codec, 50-800x slower", _WHY or "not loaded")
+
+
 def _p(a: np.ndarray, ct):
     return a.ctypes.data_as(ctypes.POINTER(ct))
 
@@ -190,9 +214,12 @@ def decode_many(payloads: list[bytes], expected: np.ndarray,
     Returns (ts, vbits, counts) or None if the native path is
     unavailable.  ``expected`` (per-block point counts from block
     metadata) sizes the output AND bounds each block — a payload that
-    tries to decode past its expected count fails inside the kernel
-    before it can read beyond its own bytes.  ``pred_size`` > 0 selects
-    the DifferentialFCM predictor with that table size.
+    tries to decode past its expected count fails inside the kernel.
+    Until then a corrupt block reads on into the bytes after it, so the
+    buffer carries enough zero padding for expected+1 maximal points
+    (114 bits each) past any block start: no read leaves the buffer.
+    ``pred_size`` > 0 selects the DifferentialFCM predictor with that
+    table size.
     """
     lib = get_lib()
     if lib is None:
@@ -202,7 +229,8 @@ def decode_many(payloads: list[bytes], expected: np.ndarray,
     lens = np.fromiter((len(p) for p in payloads), np.int64, n)
     off = np.zeros(n, dtype=np.int64)
     np.cumsum(lens[:-1], out=off[1:]) if n > 1 else None
-    buf = np.frombuffer(b"".join(payloads) + b"\x00" * 16, dtype=np.uint8)
+    pad = 16 + (256 + 114 * (int(expected.max(initial=0)) + 1)) // 8
+    buf = np.frombuffer(b"".join(payloads) + bytes(pad), dtype=np.uint8)
     cap = int(expected.sum())
     ts = np.empty(cap, dtype=np.int64)
     vb = np.empty(cap, dtype=np.uint64)
@@ -213,11 +241,9 @@ def decode_many(payloads: list[bytes], expected: np.ndarray,
         _p(ts, ctypes.c_int64), _p(vb, ctypes.c_uint64),
         _p(cnt, ctypes.c_int64), cap, pred_size)
     if got < 0:
-        raise ValueError(
-            f"native decode overflow at block {-1 - got}: decoded past "
-            f"its n_points metadata (corrupt or truncated payload)")
+        raise ValueError(DECODE_OVERFLOW.format(-1 - got))
     if got != cap or not np.array_equal(cnt, expected):
-        raise ValueError("native decode count mismatch vs block metadata")
+        raise ValueError(DECODE_MISMATCH)
     return ts, vb, cnt
 
 

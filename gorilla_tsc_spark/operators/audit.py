@@ -8,7 +8,8 @@ Checks, per block:
                  polynomial as the zlib crc the encoders store), so
                  the cheap pass never leaves whole-stage codegen;
 - ``ok_len``     payload byte length == ceil(n_bits / 8);
-- ``ok_span``    first_ts <= last_ts and agg_cnt == n_points;
+- ``ok_span``    first_ts <= last_ts, n_points > 0 and
+                 agg_cnt == n_points;
 - ``ok_decode``  the payload decodes to exactly n_points points whose
                  timestamps match [first_ts, last_ts] (bounded native
                  batch decode; a corrupt batch degrades to per-block
@@ -32,13 +33,14 @@ narrow mapInPandas over the same partitioning the scan provides.
 """
 from __future__ import annotations
 
-import zlib
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..codec.batch import decode_partition
+from ..codec.gorilla import dfcm_table_size
 
 AUDIT_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType()),
@@ -53,33 +55,18 @@ AUDIT_SCHEMA = T.StructType([
 ])
 
 
-def _decode_one(payload: bytes, expected: int, pred_size: int):
+def _decode_one(payload: bytes, expected: int, predictor: str | None):
     """Bounded single-block decode → (ts, bits) or None on corruption."""
-    from ..codec import native
-    from ..codec.fastdecode import decode_payload
-    from ..codec.gorilla import GorillaDecoder
-
     try:
-        res = native.decode_many([payload], np.array([expected], np.int64),
-                                 pred_size=pred_size)
-        if res is not None:
-            return res[0], res[1]
-        if pred_size:
-            t, v = GorillaDecoder(payload, f"dfcm{pred_size}").read_all()
-        else:
-            t, v = decode_payload(payload)
-        if len(t) != expected:
-            return None
-        return np.asarray(t, np.int64), np.asarray(v, np.uint64)
+        ts, bits, _ = decode_partition([payload],
+                                       np.array([expected], np.int64),
+                                       predictor)
+        return ts, bits
     except Exception:
         return None
 
 
 def _audit_iter(pdf_iter, predictor: str | None = None):
-    from ..codec import native
-    from ..codec.gorilla import dfcm_table_size
-
-    pred_size = dfcm_table_size(predictor)
     for pdf in pdf_iter:
         n = len(pdf)
         if n == 0:
@@ -91,21 +78,16 @@ def _audit_iter(pdf_iter, predictor: str | None = None):
 
         ok_decode = np.zeros(n, dtype=bool)
         ok_aggs = np.zeros(n, dtype=bool)
-        decoded: list | None = None
         try:
-            res = native.decode_many(payloads, expected,
-                                     pred_size=pred_size)
-        except Exception:
-            res = None
-        if res is not None:
-            ts_all, vb_all, lens = res
+            ts_all, vb_all, lens = decode_partition(payloads, expected,
+                                                    predictor)
             bounds = np.concatenate(([0], np.cumsum(lens)))
             decoded = [(ts_all[bounds[i]:bounds[i + 1]],
                         vb_all[bounds[i]:bounds[i + 1]]) for i in range(n)]
-        else:
-            # no native lib, or the batch has a corrupt member: isolate
-            # per block so one bad payload can't mask its neighbours
-            decoded = [_decode_one(payloads[i], int(expected[i]), pred_size)
+        except Exception:
+            # a corrupt member fails the batch: isolate per block so
+            # one bad payload can't mask its neighbours
+            decoded = [_decode_one(payloads[i], int(expected[i]), predictor)
                        for i in range(n)]
 
         kinds = pdf["kind"].to_numpy()
@@ -153,16 +135,12 @@ def _audit_iter(pdf_iter, predictor: str | None = None):
             "channel": pdf["channel"].to_numpy(),
             "block_start": pdf["block_start"].to_numpy(np.int64),
             "seq": pdf["seq"].to_numpy(np.int32),
-            "ok_crc": np.array([zlib.crc32(p) for p in payloads],
-                               np.int64) == pdf["crc"].to_numpy(np.int64),
-            "ok_len": np.array([len(p) for p in payloads], np.int64)
-            == np.ceil(pdf["n_bits"].to_numpy(np.int64) / 8.0).astype(np.int64),
-            "ok_span": ((first <= last) & (expected > 0)
-                        & (a_cnt.astype(np.int64) == expected)),
+            "ok_crc": pdf["ok_crc"].to_numpy(bool),
+            "ok_len": pdf["ok_len"].to_numpy(bool),
+            "ok_span": pdf["ok_span"].to_numpy(bool),
             "ok_decode": ok_decode,
             "ok_aggs": ok_aggs,
         })
-
 
 def audit_blocks(blocks: DataFrame, sample_pct: float = 100.0,
                  seed: int = 0, predictor: str | None = None) -> DataFrame:
@@ -170,23 +148,36 @@ def audit_blocks(blocks: DataFrame, sample_pct: float = 100.0,
     ``predictor`` must match the store's encode-time predictor
     (default last-value; pass e.g. ``"dfcm1024"`` for a DFCM store —
     the same both-ends-agree contract as decode_blocks)."""
+    # validate here: the kernel reads any decode error as corruption
+    dfcm_table_size(predictor)
     df = blocks
     if sample_pct < 100.0:
         bucket = F.pmod(F.xxhash64("conv_id", "channel", "block_start",
                                    "seq", F.lit(seed)), F.lit(10_000))
         df = df.where(bucket < F.lit(int(sample_pct * 100)))
+    # the metadata checks are scan-side expressions; the kernel only
+    # decodes and passes them through
+    flags = [
+        F.coalesce(F.crc32("payload") == F.col("crc"),
+                   F.lit(False)).alias("ok_crc"),
+        F.coalesce(F.length("payload") == F.ceil(F.col("n_bits") / 8),
+                   F.lit(False)).alias("ok_len"),
+        F.coalesce((F.col("first_ts") <= F.col("last_ts"))
+                   & (F.col("n_points") > 0)
+                   & (F.col("agg_cnt") == F.col("n_points")),
+                   F.lit(False)).alias("ok_span"),
+    ]
     cols = ["conv_id", "channel", "kind", "block_start", "seq", "n_points",
-            "n_bits", "payload", "first_ts", "last_ts", "agg_cnt",
-            "agg_min", "agg_max", "agg_sum", "crc"]
+            "payload", "first_ts", "last_ts", "agg_cnt", "agg_min",
+            "agg_max", "agg_sum"]
     # SQL NULL vs genuine NaN must be distinguished JVM-side: Arrow
     # renders both as NaN in a float64 pandas column, and the kernel's
     # streaming-seal exemption keys on NULLness — a real NaN aggregate
     # (NaN data values) must still be recomputed and checked
-    return (df.select(*cols,
+    return (df.select(*cols, *flags,
                       F.isnull("agg_min").alias("agg_is_null"))
             .mapInPandas(lambda it: _audit_iter(it, predictor),
                          schema=AUDIT_SCHEMA))
-
 
 def audit_summary(audit: DataFrame) -> DataFrame:
     """Fold audit rows into one counters row (single partial-agg)."""

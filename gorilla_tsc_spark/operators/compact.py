@@ -25,14 +25,12 @@ from the original blocks.
 """
 from __future__ import annotations
 
-import zlib
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..codec.batch import encode_partition
-from .encode import BLOCKS_SCHEMA, DAY_MS, GAP_SPLIT_MS, _day_cols, _day_runs
+from ..codec.batch import decode_partition
+from .encode import BLOCKS_SCHEMA, DAY_MS, GAP_SPLIT_MS, _block_frame, _day_runs
 
 
 def _compact_iter(pdf_iter, drop_range=None, predictor=None, lww_seq=None):
@@ -62,29 +60,9 @@ def _compact_iter(pdf_iter, drop_range=None, predictor=None, lww_seq=None):
 
 
 def _compact_pdf(pdf, drop_range=None, predictor=None, lww_seq=None):
-    from ..codec import native
-    from ..codec.fastdecode import decode_payload
-    from ..codec.gorilla import GorillaDecoder, dfcm_table_size
-
-    pred_size = dfcm_table_size(predictor)  # validates the spec
-    cols = [f.name for f in BLOCKS_SCHEMA.fields]
-    payloads = [bytes(p) for p in pdf["payload"]]
     expected = pdf["n_points"].to_numpy(np.int64)
-    res = native.decode_many(payloads, expected, pred_size=pred_size)
-    if res is not None:
-        ts, bits, _ = res
-    else:
-        ts_l: list[int] = []
-        v_l: list[int] = []
-        for p in payloads:
-            if pred_size:
-                t, v = GorillaDecoder(p, predictor).read_all()
-            else:
-                t, v = decode_payload(p)
-            ts_l.extend(t)
-            v_l.extend(v)
-        ts = np.array(ts_l, dtype=np.int64)
-        bits = np.array(v_l, dtype=np.uint64)
+    ts, bits, _ = decode_partition([bytes(p) for p in pdf["payload"]],
+                                   expected, predictor)
 
     # runs of (conv_id, channel) over the decoded point stream —
     # the partition is sorted by (conv_id, channel, first_ts, seq)
@@ -152,41 +130,13 @@ def _compact_pdf(pdf, drop_range=None, predictor=None, lww_seq=None):
     brk = is_start | gap
     starts = np.flatnonzero(brk).astype(np.int64)
     counts = np.diff(np.concatenate((starts, [n]))).astype(np.int64)
-    ends = starts + counts - 1
 
     first_block_of_series = np.flatnonzero(series_change)
-    blk_series = series_id[starts]
-    conv_arr = conv_b[first_block_of_series[blk_series]]
-    chan_arr = chan_b[first_block_of_series[blk_series]]
-    kind_arr = kind_b[first_block_of_series[blk_series]]
-    g_bts = (ts[starts] // DAY_MS) * DAY_MS
-
-    new_payloads, nbits = encode_partition(starts, counts, g_bts, ts, bits,
-                                           predictor)
-
-    is_double = kind_arr == "double"
-    vals = np.where(np.repeat(is_double, counts),
-                    bits.view(np.float64),
-                    bits.view(np.int64).astype(np.float64))
-    sub_s, sub_c, split, bkt = _day_runs(ts, starts, counts)
-    yield pd.DataFrame({
-        "conv_id": conv_arr,
-        "channel": chan_arr,
-        "kind": kind_arr,
-        "block_start": g_bts,
-        "seq": np.zeros(len(starts), dtype=np.int32),
-        "n_points": counts.astype(np.int32),
-        "n_bits": nbits,
-        "payload": new_payloads,
-        "first_ts": ts[starts],
-        "last_ts": ts[ends],
-        "agg_cnt": counts,
-        "agg_min": np.minimum.reduceat(vals, starts),
-        "agg_max": np.maximum.reduceat(vals, starts),
-        "agg_sum": np.add.reduceat(vals, starts),
-        **_day_cols(vals, sub_s, sub_c, split, bkt),
-        "crc": [zlib.crc32(p) for p in new_payloads],
-    }, columns=cols)
+    blk_first = first_block_of_series[series_id[starts]]
+    yield _block_frame(conv_b[blk_first], chan_b[blk_first],
+                       kind_b[blk_first], (ts[starts] // DAY_MS) * DAY_MS,
+                       np.zeros(len(starts), dtype=np.int32), starts, counts,
+                       ts, bits, _day_runs(ts, starts, counts), predictor)
 
 
 def compact_blocks(blocks: DataFrame,

@@ -11,9 +11,11 @@ Layout decisions (scale rationale):
 - Channels are computed JVM-side BEFORE the shuffle; only numeric rows
   (conv_id, day, seq, turn_idx, ts_ms, channel values) are shuffled —
   at 10^12 turns the text never moves.
-- The encode kernel is GroupedData.applyInPandas: Arrow batches in, one
-  block row per channel out; inside it runs the vectorized NumPy codec
-  (codec/gorilla.py encode_block). No per-row Python crosses Spark.
+- The encode kernel is mapInPandas over packed block rows (one row per
+  block with array columns, ``pack_blocks``): inside it
+  codec/batch.encode_partition encodes every block of the Arrow batch
+  in one native call, and ``_block_frame`` assembles the block rows.
+  No per-row Python crosses Spark.
 - Blocks carry value-domain pre-aggregates (cnt/min/max/sum) so rollup
   tiers can be produced from block metadata without decoding — the
   continuous-aggregate fast path; decode-verify cross-checks it.
@@ -28,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..codec.gorilla import GorillaDecoder, encode_block
+from ..codec.batch import decode_partition, encode_partition, group_runs
 from ..functions.channels import Channel, default_channels
 
 DAY_MS = 86_400_000
@@ -138,58 +140,72 @@ def _day_cols(vals: np.ndarray, sub_starts, sub_counts, split, bucket_ms):
     }
 
 
-def _make_encode_kernel(channels: list[Channel], predictor: str | None):
-    chans = [(c.name, c.kind) for c in channels]
+_BLOCK_COLS = [f.name for f in BLOCKS_SCHEMA.fields]
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["turn_idx", "ts_ms"], kind="mergesort")
-        ts = pdf["ts_ms"].to_numpy(dtype=np.int64)
-        day = int(pdf["day"].iloc[0])
-        seq = int(pdf["seq"].iloc[0])
-        conv = pdf["conv_id"].iloc[0]
-        block_start = day * DAY_MS
-        rows = []
-        for name, kind in chans:
-            col = pdf[f"ch_{name}"].to_numpy()
-            if kind == "double":
-                vals = col.astype(np.float64)
-                bits = vals.view(np.uint64)
-            else:
-                lv = col.astype(np.int64)
-                bits = lv.view(np.uint64)
-                vals = lv.astype(np.float64)
-            enc = encode_block(block_start, ts, bits, predictor)
-            enc.close()
-            payload = enc.to_bytes()
-            rows.append((
-                conv, name, kind, block_start, seq,
-                len(ts), enc.n_bits, payload,
-                int(ts[0]), int(ts[-1]),
-                # sequential fold (reduceat), the same summation order
-                # as the batch kernel — ONE reproducible agg_sum
-                # algorithm store-wide (the integrity audit recomputes
-                # it bit-for-bit, operators/audit.py)
-                len(ts), float(vals.min()), float(vals.max()),
-                float(np.add.reduceat(vals, [0])[0]),
-                None, None, None, None, None,
-                zlib.crc32(payload),
-            ))
-        return pd.DataFrame(rows, columns=[f.name for f in BLOCKS_SCHEMA.fields])
 
-    return kernel
+def _block_frame(conv_id, channel, kind, block_ts, seq, starts, counts,
+                 ts, bits, day_runs=None,
+                 predictor: str | None = None) -> pd.DataFrame:
+    """Encode the (starts, counts) runs of ``ts``/``bits`` and assemble
+    their BLOCKS_SCHEMA rows.
+
+    conv_id/channel/kind/seq are per-block arrays or scalars; ``kind``
+    says how the value words read as numbers for the cnt/min/max/sum
+    aggregates.  ``day_runs`` is ``_day_runs(ts, starts, counts)`` for
+    blocks that may span days (their per-day sub-aggregates fill the
+    day_* columns), or None for day-aligned blocks (NULL day_* cells).
+    """
+    payloads, nbits = encode_partition(starts, counts, block_ts, ts, bits,
+                                       predictor)
+    is_double = np.asarray(kind) == "double"
+    if is_double.ndim:
+        is_double = np.repeat(is_double, counts)
+    vals = np.where(is_double, bits.view(np.float64),
+                    bits.view(np.int64).astype(np.float64))
+    return pd.DataFrame({
+        "conv_id": conv_id,
+        "channel": channel,
+        "kind": kind,
+        "block_start": block_ts,
+        "seq": seq,
+        "n_points": counts.astype(np.int32),
+        "n_bits": nbits,
+        "payload": payloads,
+        "first_ts": ts[starts],
+        "last_ts": ts[starts + counts - 1],
+        "agg_cnt": counts,
+        # sequential fold (reduceat): ONE reproducible agg_sum
+        # algorithm store-wide (the integrity audit recomputes it
+        # bit-for-bit, operators/audit.py)
+        "agg_min": np.minimum.reduceat(vals, starts),
+        "agg_max": np.maximum.reduceat(vals, starts),
+        "agg_sum": np.add.reduceat(vals, starts),
+        **(_none_day_cols(len(starts)) if day_runs is None
+           else _day_cols(vals, *day_runs)),
+        "crc": [zlib.crc32(p) for p in payloads],
+    }, columns=_BLOCK_COLS)
+
+
+def _encode_channels(chans, column, conv_id, block_ts, seq, starts, counts,
+                     ts, day_runs=None, predictor: str | None = None):
+    """One ``_block_frame`` per channel; ``column(name)`` gives the
+    channel's per-point values."""
+    frames = []
+    for name, kind in chans:
+        col = column(name)
+        bits = (col.astype(np.float64) if kind == "double"
+                else col.astype(np.int64)).view(np.uint64)
+        frames.append(_block_frame(conv_id, name, kind, block_ts, seq,
+                                   starts, counts, ts, bits, day_runs,
+                                   predictor))
+    return pd.concat(frames) if len(frames) > 1 else frames[0]
 
 
 def _make_batch_kernel(channels: list[Channel]):
     """Partition-level kernel: one Python call per PARTITION, not per
-    group — the per-group fixed cost (~200µs of NumPy setup) collapses
-    to ~10µs via codec/batch.encode_partition, which vectorizes the
-    codec across every block in the partition."""
-    import zlib as _zlib
-
-    from ..codec.batch import encode_partition, group_runs
-
+    group — every block of the batch goes through one
+    codec/batch.encode_partition call."""
     chans = [(c.name, c.kind) for c in channels]
-    cols = [f.name for f in BLOCKS_SCHEMA.fields]
 
     def kernel(pdf_iter):
         # stream Arrow batches with a carry for the boundary run (same
@@ -242,42 +258,11 @@ def _make_batch_kernel(channels: list[Channel]):
                 f" — raise points_per_block (seq = turn_idx // ppb)")
         key = (conv_codes.astype(np.int64) << 40) | (day << 16) | seq
         starts, counts = group_runs(key)
-        ts = pdf["ts_ms"].to_numpy(np.int64)
-        g_conv = np.asarray(conv_uniques)[conv_codes[starts]]
-        g_bts = day[starts] * DAY_MS
-        g_seq = seq[starts].astype(np.int32)
-        g_first = ts[starts]
-        g_last = ts[starts + counts - 1]
-        frames = []
-        for name, kind in chans:
-            col = pdf[f"ch_{name}"].to_numpy()
-            if kind == "double":
-                vals = col.astype(np.float64)
-                bits = vals.view(np.uint64)
-            else:
-                lv = col.astype(np.int64)
-                bits = lv.view(np.uint64)
-                vals = lv.astype(np.float64)
-            payloads, nbits = encode_partition(starts, counts, g_bts, ts, bits)
-            frames.append(pd.DataFrame({
-                "conv_id": g_conv,
-                "channel": name,
-                "kind": kind,
-                "block_start": g_bts,
-                "seq": g_seq,
-                "n_points": counts.astype(np.int32),
-                "n_bits": nbits,
-                "payload": payloads,
-                "first_ts": g_first,
-                "last_ts": g_last,
-                "agg_cnt": counts,
-                "agg_min": np.minimum.reduceat(vals, starts),
-                "agg_max": np.maximum.reduceat(vals, starts),
-                "agg_sum": np.add.reduceat(vals, starts),
-                **_none_day_cols(G_blocks=len(starts)),
-                "crc": [_zlib.crc32(p) for p in payloads],
-            }, columns=cols))
-        return pd.concat(frames) if len(frames) > 1 else frames[0]
+        return _encode_channels(
+            chans, lambda name: pdf[f"ch_{name}"].to_numpy(),
+            np.asarray(conv_uniques)[conv_codes[starts]],
+            day[starts] * DAY_MS, seq[starts].astype(np.int32),
+            starts, counts, pdf["ts_ms"].to_numpy(np.int64))
 
     return kernel
 
@@ -288,9 +273,8 @@ def encode_blocks(transcripts: DataFrame, channels: list[Channel] | None = None,
                   clustered: bool = False, span: str = "day") -> DataFrame:
     """transcripts → gorilla_blocks. One shuffle, keyed (conv_id, day, seq).
 
-    Default (last-value predictor) path: partition-batched vectorized
-    kernel via mapInPandas. Custom predictors (DFCM) keep the bit-exact
-    per-group scalar path.
+    Unless ``clustered``, every predictor runs the packed JVM-grouping
+    kernel (``encode_points``).
 
     ``clustered=True`` declares that each conversation's rows already
     live inside one input partition (an Iceberg/parquet table bucketed
@@ -322,12 +306,7 @@ def _make_packed_kernel(channels: list[Channel], span: str = "day",
     with array payloads instead of N point rows, and the transfer
     disappears from the critical path."""
     span_auto = span == "auto"
-    import zlib as _zlib
-
-    from ..codec.batch import encode_partition
-
     chans = [(c.name, c.kind) for c in channels]
-    cols = [f.name for f in BLOCKS_SCHEMA.fields]
 
     def kernel(pdf_iter):
         for pdf in pdf_iter:
@@ -340,6 +319,7 @@ def _make_packed_kernel(channels: list[Channel], span: str = "day",
             ts = np.concatenate(ts_cells).astype(np.int64)
             conv_arr = pdf["conv_id"].to_numpy()
             seq_arr = pdf["seq"].to_numpy(np.int32)
+            day_runs = None
             if span_auto:
                 # split only where a same-conv step would overflow the
                 # 32-bit delta (≥ ~24.8 days), then re-derive each
@@ -356,48 +336,14 @@ def _make_packed_kernel(channels: list[Channel], span: str = "day",
                 conv_arr = conv_arr[gidx[starts]]
                 seq_arr = seq_arr[gidx[starts]]
                 g_bts = (ts[starts] // DAY_MS) * DAY_MS
-                chan_cells = {name: np.concatenate(pdf[f"ch_{name}_arr"].to_numpy())
-                              for name, _ in chans}
+                day_runs = _day_runs(ts, starts, counts)
             else:
                 g_bts = pdf["day"].to_numpy(np.int64) * DAY_MS
-                chan_cells = None
-            ends = starts + counts - 1
-            if span_auto:
-                sub_s, sub_c, split, bkt = _day_runs(ts, starts, counts)
-            frames = []
-            for name, kind in chans:
-                col = (chan_cells[name] if chan_cells is not None else
-                       np.concatenate(pdf[f"ch_{name}_arr"].to_numpy()))
-                if kind == "double":
-                    vals = col.astype(np.float64)
-                    bits = vals.view(np.uint64)
-                else:
-                    lv = col.astype(np.int64)
-                    bits = lv.view(np.uint64)
-                    vals = lv.astype(np.float64)
-                payloads, nbits = encode_partition(
-                    starts, counts, g_bts, ts, bits, predictor)
-                frames.append(pd.DataFrame({
-                    "conv_id": conv_arr,
-                    "channel": name,
-                    "kind": kind,
-                    "block_start": g_bts,
-                    "seq": seq_arr,
-                    "n_points": counts.astype(np.int32),
-                    "n_bits": nbits,
-                    "payload": payloads,
-                    "first_ts": ts[starts],
-                    "last_ts": ts[ends],
-                    "agg_cnt": counts,
-                    "agg_min": np.minimum.reduceat(vals, starts),
-                    "agg_max": np.maximum.reduceat(vals, starts),
-                    "agg_sum": np.add.reduceat(vals, starts),
-                    **(_day_cols(vals, sub_s, sub_c, split, bkt)
-                       if span_auto else
-                       _none_day_cols(G_blocks=len(starts))),
-                    "crc": [_zlib.crc32(p) for p in payloads],
-                }, columns=cols))
-            yield pd.concat(frames) if len(frames) > 1 else frames[0]
+            yield _encode_channels(
+                chans,
+                lambda name: np.concatenate(pdf[f"ch_{name}_arr"].to_numpy()),
+                conv_arr, g_bts, seq_arr, starts, counts, ts, day_runs,
+                predictor)
 
     return kernel
 
@@ -447,71 +393,26 @@ def encode_points(pts: DataFrame, channels: list[Channel],
 
 
 def _decode_iter(pdf_iter, predictor: str | None):
-    from ..codec import native
-    from ..codec.fastdecode import decode_payload
-    from ..codec.gorilla import dfcm_table_size
-
-    fast = predictor in (None, "last_value")
-    pred_size = dfcm_table_size(predictor)  # validates the spec
     for pdf in pdf_iter:
-        payloads = pdf["payload"].tolist()
-        # native C batch decode (all predictors): one call per Arrow
-        # batch, output presized from block metadata (counts
-        # cross-checked, each block's decode bounded by its n_points)
-        res = native.decode_many(
-            [bytes(p) for p in payloads],
-            pdf["n_points"].to_numpy(np.int64),
-            pred_size=pred_size)
-        if res is not None:
-            ts_a, bits, lens = res
-            n = len(ts_a)
-            if n == 0:
-                continue
-            conv = np.repeat(pdf["conv_id"].to_numpy(), lens)
-            chan = np.repeat(pdf["channel"].to_numpy(), lens)
-            kind = np.repeat(pdf["kind"].to_numpy(), lens)
-            is_double = kind == "double"
-            vd = np.where(is_double, bits.view(np.float64), np.nan)
-            vl = pd.arrays.IntegerArray(bits.view(np.int64).copy(),
-                                        is_double)
-            yield pd.DataFrame({
-                "conv_id": conv, "channel": chan, "kind": kind,
-                "ts_ms": ts_a, "v_double": vd, "v_long": vl,
-            })
+        # one codec call per Arrow batch, output presized from block
+        # metadata (counts cross-checked, each block's decode bounded
+        # by its n_points)
+        ts_a, bits, lens = decode_partition(
+            [bytes(p) for p in pdf["payload"]],
+            pdf["n_points"].to_numpy(np.int64), predictor)
+        if len(ts_a) == 0:
             continue
-        ts_l: list[int] = []
-        v_l: list[int] = []
-        lens = np.empty(len(pdf), dtype=np.int64)
-        if fast:
-            for i, p in enumerate(payloads):
-                t, v = decode_payload(bytes(p))
-                ts_l.extend(t)
-                v_l.extend(v)
-                lens[i] = len(t)
-        else:
-            for i, p in enumerate(payloads):
-                t, v = GorillaDecoder(bytes(p), predictor).read_all()
-                ts_l.extend(t.tolist())
-                v_l.extend(v.tolist())
-                lens[i] = len(t)
-        n = len(ts_l)
-        if n == 0:
-            continue
-        conv = np.repeat(pdf["conv_id"].to_numpy(), lens)
-        chan = np.repeat(pdf["channel"].to_numpy(), lens)
         kind = np.repeat(pdf["kind"].to_numpy(), lens)
-        bits = np.array(v_l, dtype=np.uint64)
         is_double = kind == "double"
-        vd = np.where(is_double, bits.view(np.float64), np.nan)
-        # keep exact int64 for long channels (xxhash64 > 2^53)
-        vl = pd.arrays.IntegerArray(bits.view(np.int64).copy(), is_double)
         yield pd.DataFrame({
-            "conv_id": conv,
-            "channel": chan,
+            "conv_id": np.repeat(pdf["conv_id"].to_numpy(), lens),
+            "channel": np.repeat(pdf["channel"].to_numpy(), lens),
             "kind": kind,
-            "ts_ms": np.array(ts_l, dtype=np.int64),
-            "v_double": vd,
-            "v_long": vl,
+            "ts_ms": ts_a,
+            "v_double": np.where(is_double, bits.view(np.float64), np.nan),
+            # keep exact int64 for long channels (xxhash64 > 2^53)
+            "v_long": pd.arrays.IntegerArray(bits.view(np.int64).copy(),
+                                             is_double),
         })
 
 
@@ -534,11 +435,10 @@ def decode_blocks(blocks: DataFrame, predictor: str | None = None,
         )
 
     def checked(it):
-        import zlib as _z
         for pdf in it:
             crcs = pdf["crc"].to_numpy(np.int64)
             for i, p in enumerate(pdf["payload"]):
-                got = _z.crc32(bytes(p))
+                got = zlib.crc32(bytes(p))
                 if got != crcs[i]:
                     raise ValueError(
                         "crc mismatch on block "

@@ -207,8 +207,9 @@ def trend_forecast(tier: DataFrame, bucket_ms: int,
     a degenerate minute spread): refusing to forecast beats
     extrapolating a point.  A forecast is an ESTIMATE by contract —
     the family's exactness guarantee covers the carried sums, not the
-    extrapolation — so this serve stays out of the hash-exact driver
-    gate and is pinned by pytest against the closed-form line."""
+    extrapolation — so the ``tier_families_1d`` driver gate compares
+    it rounded to 6 decimals against the oracle's closed-form line,
+    and pytest pins it too."""
     xs = F.lit((bucket_ms + horizon_ms) / MINUTE_MS)
     est = trend_estimates(tier)
     return est.withColumn(

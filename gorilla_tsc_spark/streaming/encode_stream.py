@@ -9,11 +9,11 @@ per (conv, day, seq); the streaming twin accumulates points per
 - the buffered point count reaches ``points_per_block``.
 
 Sealed blocks are bit-identical to the batch encoder's output for the
-same point set (same encode_partition kernel under the hood via
-encode_block). State carries raw (ts, bits) arrays, NOT codec state:
-Gorilla's 27-bit first delta makes day blocks self-contained, and raw
-buffering keeps state replayable across restarts (checkpointed by the
-state store).
+same point set: the sealer calls the same codec entry point,
+codec/batch.encode_partition. State carries raw (ts, bits) arrays, NOT
+codec state: Gorilla's 27-bit first delta makes day blocks
+self-contained, and raw buffering keeps state replayable across
+restarts (checkpointed by the state store).
 """
 from __future__ import annotations
 
@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..codec.gorilla import encode_block
+from ..codec.batch import encode_partition
 
 DAY_MS = 86_400_000
 
@@ -71,9 +71,9 @@ def _seal(conv_id: str, day: int, ts: np.ndarray, vb: np.ndarray,
     order = np.lexsort((ts, turn))
     ts = ts[order]
     vb = vb[order]
-    enc = encode_block(day * DAY_MS, ts, vb.view(np.uint64))
-    enc.close()
-    payload = enc.to_bytes()
+    (payload,), _ = encode_partition(
+        np.array([0], np.int64), np.array([len(ts)], np.int64),
+        np.array([day * DAY_MS], np.int64), ts, vb.view(np.uint64))
     return (conv_id, "len", day * DAY_MS, len(ts), payload,
             int(ts[0]), int(ts[-1]), zlib.crc32(payload))
 

@@ -68,13 +68,15 @@ def main() -> None:
                                & (F.col("first_ts") < args.t1_ms)).count()
     pts = read_range(blocks, args.t0_ms, args.t1_ms, conv_ids=conv_ids,
                      predictor=args.predictor)
+    # re-read with the written schema: an empty window leaves only
+    # _SUCCESS, which schema inference cannot read
     if args.format == "jsonl":
         pts.write.mode("overwrite").json(args.out)
-        n_pts = spark.read.json(args.out).count()
+        n_pts = spark.read.schema(pts.schema).json(args.out).count()
     elif args.format == "csv":
         pts.write.mode("overwrite").option("header", "true").csv(args.out)
-        n_pts = (spark.read.option("header", "true").csv(args.out)
-                 .count())
+        n_pts = (spark.read.schema(pts.schema).option("header", "true")
+                 .csv(args.out).count())
     else:
         pts.write.mode("overwrite").parquet(args.out)
         n_pts = spark.read.parquet(args.out).count()

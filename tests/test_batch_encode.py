@@ -1,11 +1,12 @@
-"""Batch (partition-level) encoder must be bit-identical to the
-golden-vector-validated per-block encoder for every block."""
+"""The partition-level codec entry points (codec/batch.py) must be
+bit-identical to the golden-vector-validated per-block reference:
+encode_partition vs encode_block for every block, decode_partition vs
+GorillaDecoder for every payload."""
 from __future__ import annotations
 
 import numpy as np
-import pytest
-
-from gorilla_tsc_spark.codec.batch import encode_partition, group_runs
+from gorilla_tsc_spark.codec.batch import (decode_partition,
+                                           encode_partition, group_runs)
 from gorilla_tsc_spark.codec.gorilla import GorillaDecoder, encode_block
 
 DAY_MS = 86_400_000
@@ -106,3 +107,43 @@ def test_decodes_roundtrip():
         ts2, v2 = GorillaDecoder(p).read_all()
         assert np.array_equal(ts2, tg[i])
         assert np.array_equal(v2, vg[i])
+
+
+def _check_decode(ts, vals_u64, block_ts):
+    enc = encode_block(block_ts, np.asarray(ts, np.int64),
+                       np.asarray(vals_u64, np.uint64))
+    enc.close()
+    payload = enc.to_bytes()
+    t_ref, v_ref = GorillaDecoder(payload).read_all()
+    t, v, cnt = decode_partition([payload], np.array([len(ts)], np.int64))
+    assert cnt.tolist() == [len(ts)]
+    assert np.array_equal(t, t_ref)
+    assert np.array_equal(v, v_ref)
+
+
+def test_decode_partition_shapes_and_specials():
+    rng = np.random.default_rng(3)
+    for n in (1, 2, 3, 10, 257, 5000):
+        ts = BASE + np.cumsum(rng.integers(1, 120_000, n)).astype(np.int64)
+        for vals in (
+            rng.standard_normal(n),
+            np.full(n, 7.25),
+            rng.choice([np.nan, np.inf, -np.inf, -0.0, 1.5, 2.0, 2.0], n),
+            rng.integers(-100, 100, n).astype(np.float64),
+        ):
+            _check_decode(ts, vals.view(np.uint64), BASE)
+
+
+def test_decode_partition_dod_buckets_and_long_values():
+    rng = np.random.default_rng(5)
+    strides = rng.choice([1, 2, 59, 60, 61, 4000, 100_000, 8_000_000], 2000)
+    ts = BASE + np.cumsum(strides).astype(np.int64)
+    vals = rng.integers(-5, 5, 2000).astype(np.int64).view(np.uint64)
+    _check_decode(ts, vals, BASE)
+
+
+def test_decode_partition_empty_block():
+    enc = encode_block(BASE, np.array([], np.int64), np.array([], np.uint64))
+    enc.close()
+    t, v, cnt = decode_partition([enc.to_bytes()], np.array([0], np.int64))
+    assert len(t) == 0 and len(v) == 0 and cnt.tolist() == [0]

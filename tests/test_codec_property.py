@@ -1,14 +1,15 @@
 """Property-based codec tests (hypothesis) — beyond the reference's
 fixed vectors: arbitrary float64 payloads and timestamp patterns must
-round-trip bit-exactly through scalar, batch, and fast-decode paths."""
+round-trip bit-exactly through the scalar reference and the engine's
+partition entry points (codec/batch.py)."""
 from __future__ import annotations
 
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from gorilla_tsc_spark.codec.batch import encode_partition, group_runs
-from gorilla_tsc_spark.codec.fastdecode import decode_payload
+from gorilla_tsc_spark.codec.batch import (decode_partition,
+                                           encode_partition, group_runs)
 from gorilla_tsc_spark.codec.gorilla import GorillaDecoder, encode_block
 
 DAY_MS = 86_400_000
@@ -30,9 +31,8 @@ def test_roundtrip_any_bits(points):
     payload = enc.to_bytes()
     t1, v1 = GorillaDecoder(payload).read_all()
     assert np.array_equal(t1, ts) and np.array_equal(v1, vb)
-    t2, v2 = decode_payload(payload)
-    assert np.array_equal(np.array(t2, np.int64), ts)
-    assert np.array_equal(np.array(v2, np.uint64), vb)
+    t2, v2, _ = decode_partition([payload], np.array([len(ts)], np.int64))
+    assert np.array_equal(t2, ts) and np.array_equal(v2, vb)
 
 
 @settings(max_examples=25, deadline=None)
@@ -127,8 +127,8 @@ def test_compact_kernel_identity(series_frags):
     out = pd.concat(list(_compact_pdf(pdf)), ignore_index=True)
     got = {}
     for r in out.itertuples(index=False):
-        t2, v2 = decode_payload(bytes(r.payload))
-        assert len(t2) == r.n_points
+        t2, v2, _ = decode_partition([bytes(r.payload)],
+                                     np.array([r.n_points], np.int64))
         got.setdefault(r.conv_id, []).extend(
             (int(a), int(np.uint64(b))) for a, b in zip(t2, v2))
         # no step inside a compacted block may reach the split bound
@@ -159,8 +159,8 @@ def test_compact_kernel_drop_range(series_frags, a, b):
     got = {}
     for chunk in out_iter:
         for r in chunk.itertuples(index=False):
-            t2, v2 = decode_payload(bytes(r.payload))
-            assert len(t2) == r.n_points
+            t2, v2, _ = decode_partition([bytes(r.payload)],
+                                         np.array([r.n_points], np.int64))
             got.setdefault(r.conv_id, []).extend(
                 (int(x), int(np.uint64(y))) for x, y in zip(t2, v2))
     for conv, pts in truth.items():

@@ -2,9 +2,9 @@
 run_pipeline warehouse: audit (clean store, exit 0), compaction (point
 count preserved, block count shrinks), conversation purge (victim gone,
 survivors byte-identical), retention sweep (old tier rows dropped,
-tables still readable).  The operators themselves are driver/pytest
-gated elsewhere — this pins the JOB wiring: arg parsing, warehouse IO,
-staging rewrites, counters."""
+tables still readable), export of an empty window (zero points).  The
+operators themselves are driver/pytest gated elsewhere — this pins the
+JOB wiring: arg parsing, warehouse IO, staging rewrites, counters."""
 from __future__ import annotations
 
 import json
@@ -81,6 +81,16 @@ def test_maintenance_jobs_end_to_end(spark, tmp_path_factory, capsys,
     assert r["rollup_1m"]["kept"] == 0
     # the swept table is still a readable (empty) tier
     assert spark.read.parquet(f"{wh}/rollup_1m").count() == 0
+
+    # 5. export of an empty window as jsonl: no part files, zero points
+    import jobs.export_job as export_job
+    monkeypatch.setattr(sys, "argv", [
+        "export_job.py", "--warehouse", wh, "--t0-ms", "0", "--t1-ms", "1",
+        "--out", str(tmp_path_factory.mktemp("export") / "empty"),
+        "--format", "jsonl", "--cores", "8"])
+    export_job.main()
+    x = _stats(capsys)
+    assert x["blocks_overlapping"] == 0 and x["points_exported"] == 0
 
 
 def test_backfill_job_end_to_end(spark, tmp_path_factory, capsys,

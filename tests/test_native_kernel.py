@@ -1,24 +1,29 @@
-"""Native C kernel ≡ Python reference kernels, bit for bit.
+"""Native C kernel ≡ golden reference words ≡ scalar reference codec.
 
 The C fast path (codec/native.py + _gorilla_kernel.c) must reproduce
-exactly what the golden-vector-validated Python paths produce:
-- encode: byte-identical payloads + n_bits vs codec/batch.py
-  (encode_partition_numpy), on every last-value golden fixture and on
-  random corpora spanning the dod buckets, XOR window churn, repeats
-  and single-point blocks;
-- decode: identical (ts, value-word) streams vs codec/fastdecode.
+exactly what the reference implementation produces:
+- encode: the golden fixtures' expected words, and byte-identical
+  payloads + n_bits vs the scalar reference (codec/gorilla.py
+  encode_block) on random corpora spanning the dod buckets, XOR window
+  churn, repeats and single-point blocks;
+- decode: identical (ts, value-word) streams vs GorillaDecoder.
 
-When no C compiler is available the module is skipped and the engine
-runs the Python kernels (native.decode_many/encode_many return None).
+The engine's entry points (codec/batch.py) fall back to that scalar
+reference when the kernel is not loaded; the last test forces the
+fallback and checks both paths agree byte for byte and error for error.
+
+When no C compiler is available the module is skipped.
 """
 from __future__ import annotations
+
+import logging
 
 import numpy as np
 import pytest
 
 from gorilla_tsc_spark.codec import native
-from gorilla_tsc_spark.codec.batch import encode_partition_numpy
-from gorilla_tsc_spark.codec.fastdecode import decode_payload
+from gorilla_tsc_spark.codec.batch import decode_partition, encode_partition
+from gorilla_tsc_spark.codec.gorilla import GorillaDecoder, encode_block
 
 from .conftest import fixture_names, load_fixture
 
@@ -28,7 +33,16 @@ pytestmark = pytest.mark.skipif(native.get_lib() is None,
 U64 = (1 << 64) - 1
 
 
-def _lv_fixtures():
+def _long_array(payload: bytes, n_bits: int) -> list[int]:
+    """The reference's flushed ``getLongArray()`` words for a payload:
+    the data words plus the trailing word(s) the reference appends."""
+    pad = (-len(payload)) % 8
+    words = (np.frombuffer(payload + bytes(pad), dtype=">u8")
+             .astype(np.uint64).tolist())
+    return words + [0] * (2 if n_bits % 64 == 0 else 1)
+
+
+def _gorilla_fixtures():
     out = []
     for n in fixture_names():
         fx = load_fixture(n)
@@ -38,23 +52,28 @@ def _lv_fixtures():
     return out
 
 
-@pytest.mark.parametrize("name", _lv_fixtures())
-def test_native_matches_golden(name):
-    fx = load_fixture(name)
+def _fixture_block(fx):
     pts = [(ts, int(v, 16)) for ts, v in fx["input"]["points"]]
     ts = np.array([p[0] for p in pts], dtype=np.int64)
     vb = np.array([p[1] for p in pts], dtype=np.uint64)
     starts = np.array([0], np.int64)
     counts = np.array([len(pts)], np.int64)
     bts = np.array([fx["input"]["blockts"]], np.int64)
-    p_ref, bits_ref = encode_partition_numpy(starts, counts, bts, ts, vb)
+    return starts, counts, bts, ts, vb
+
+
+@pytest.mark.parametrize("name", _gorilla_fixtures())
+def test_native_matches_golden(name):
+    fx = load_fixture(name)
+    starts, counts, bts, ts, vb = _fixture_block(fx)
     p_nat, bits_nat = native.encode_many(starts, counts, bts, ts, vb)
-    assert p_nat[0] == p_ref[0]
-    assert int(bits_nat[0]) == int(bits_ref[0])
-    t_ref, v_ref = decode_payload(p_ref[0])
-    t_n, v_n, cnt = native.decode_many([p_ref[0]], counts)
-    assert t_n.tolist() == t_ref
-    assert v_n.tolist() == v_ref
+    assert len(p_nat[0]) == (int(bits_nat[0]) + 7) // 8
+    assert _long_array(p_nat[0], int(bits_nat[0])) == \
+        [int(h, 16) for h in fx["longs"]]
+    t_n, v_n, cnt = native.decode_many([p_nat[0]], counts)
+    t_ref, v_ref = GorillaDecoder(p_nat[0]).read_all()
+    assert np.array_equal(t_n, t_ref) and np.array_equal(v_n, v_ref)
+    assert np.array_equal(t_n, ts) and np.array_equal(v_n, vb)
 
 
 def _vo_fixtures():
@@ -180,20 +199,33 @@ def _random_partition(seed: int):
             np.concatenate(all_vb))
 
 
+def _reference_encode(starts, counts, bts, ts, vb, predictor=None):
+    payloads, nbits = [], []
+    for i in range(len(starts)):
+        s, c = int(starts[i]), int(counts[i])
+        enc = encode_block(int(bts[i]), ts[s:s + c], vb[s:s + c], predictor)
+        enc.close()
+        payloads.append(enc.to_bytes())
+        nbits.append(enc.n_bits)
+    return payloads, np.array(nbits, np.int64)
+
+
 @pytest.mark.parametrize("seed", [1, 7, 42])
 def test_native_matches_numpy_random(seed):
+    """Against the reference encode_block (NumPy-vectorized for the
+    last-value predictor) and GorillaDecoder."""
     starts, counts, bts, ts, vb = _random_partition(seed)
-    p_ref, bits_ref = encode_partition_numpy(starts, counts, bts, ts, vb)
+    p_ref, bits_ref = _reference_encode(starts, counts, bts, ts, vb)
     p_nat, bits_nat = native.encode_many(starts, counts, bts, ts, vb)
-    assert all(a == b for a, b in zip(p_ref, p_nat))
-    assert np.array_equal(np.asarray(bits_ref), np.asarray(bits_nat))
+    assert p_nat == p_ref
+    assert np.array_equal(bits_ref, bits_nat)
     t_n, v_n, cnt = native.decode_many(p_ref, counts)
     off = 0
-    for i, p in enumerate(p_ref):
-        t_ref, v_ref = decode_payload(p)
+    for p in p_ref:
+        t_ref, v_ref = GorillaDecoder(p).read_all()
         n = len(t_ref)
-        assert t_n[off:off + n].tolist() == t_ref
-        assert v_n[off:off + n].tolist() == v_ref
+        assert np.array_equal(t_n[off:off + n], t_ref)
+        assert np.array_equal(v_n[off:off + n], v_ref)
         off += n
     assert off == len(t_n)
 
@@ -201,23 +233,14 @@ def test_native_matches_numpy_random(seed):
 def test_native_dfcm_matches_golden():
     """Golden DFCM vector stays bit-exact through the C predictor path
     (DifferentialFCM.java:10-47; verdict r2 item 3)."""
-    from gorilla_tsc_spark.codec.gorilla import GorillaDecoder, encode_block
     fx = load_fixture("dfcm")
-    pts = [(ts, int(v, 16)) for ts, v in fx["input"]["points"]]
-    ts = np.array([p[0] for p in pts], dtype=np.int64)
-    vb = np.array([p[1] for p in pts], dtype=np.uint64)
-    starts = np.array([0], np.int64)
-    counts = np.array([len(pts)], np.int64)
-    bts = np.array([fx["input"]["blockts"]], np.int64)
-    enc = encode_block(int(bts[0]), ts, vb, "dfcm:1024")
-    enc.close()
-    p_ref = enc.to_bytes()
+    starts, counts, bts, ts, vb = _fixture_block(fx)
     p_nat, bits_nat = native.encode_many(starts, counts, bts, ts, vb,
                                          pred_size=1024)
-    assert bytes(p_nat[0]) == p_ref
-    assert int(bits_nat[0]) == enc.n_bits
-    t_n, v_n, cnt = native.decode_many([p_ref], counts, pred_size=1024)
-    t_s, v_s = GorillaDecoder(p_ref, "dfcm:1024").read_all()
+    assert _long_array(p_nat[0], int(bits_nat[0])) == \
+        [int(h, 16) for h in fx["longs"]]
+    t_n, v_n, cnt = native.decode_many(p_nat, counts, pred_size=1024)
+    t_s, v_s = GorillaDecoder(p_nat[0], "dfcm:1024").read_all()
     assert np.array_equal(t_n, t_s) and np.array_equal(t_n, ts)
     assert np.array_equal(v_n, v_s) and np.array_equal(v_n, vb)
 
@@ -226,15 +249,9 @@ def test_native_dfcm_matches_golden():
 def test_native_dfcm_random(table_size):
     """Random corpora through the DFCM C path ≡ scalar Python codec,
     including non-pow2 table sizes (rounded up like the reference)."""
-    from gorilla_tsc_spark.codec.gorilla import GorillaDecoder, encode_block
     starts, counts, bts, ts, vb = _random_partition(table_size)
     pred = f"dfcm:{table_size}"
-    p_ref = []
-    for i in range(len(starts)):
-        s, c = int(starts[i]), int(counts[i])
-        enc = encode_block(int(bts[i]), ts[s:s + c], vb[s:s + c], pred)
-        enc.close()
-        p_ref.append(enc.to_bytes())
+    p_ref, _ = _reference_encode(starts, counts, bts, ts, vb, pred)
     p_nat, _ = native.encode_many(starts, counts, bts, ts, vb,
                                   pred_size=table_size)
     assert [bytes(x) for x in p_nat] == p_ref
@@ -243,18 +260,63 @@ def test_native_dfcm_random(table_size):
     assert np.array_equal(v_n, vb)
 
 
+def _corruptions(payloads, counts):
+    """(payloads, expected) pairs that must fail to decode: a truncated
+    final payload (the zero pad decodes as repeats past its count),
+    metadata that undercounts a block, and metadata that overcounts."""
+    trunc = list(payloads)
+    trunc[-1] = trunc[-1][: len(trunc[-1]) // 2]
+    under = counts.copy()
+    under[0] -= 1
+    over = counts.copy()
+    over[0] += 1
+    return [(trunc, counts), (payloads, under), (payloads, over)]
+
+
 def test_native_decode_bounded_by_expected():
     """A truncated/corrupt payload must fail cleanly instead of walking
     past its bytes (zeros decode as dod=0 repeats) — ADVICE r2."""
     starts, counts, bts, ts, vb = _random_partition(3)
-    p_ref, _ = encode_partition_numpy(starts, counts, bts, ts, vb)
-    # truncated final payload: the zero pad would repeat forever
-    trunc = list(p_ref)
-    trunc[-1] = trunc[-1][: len(trunc[-1]) // 2]
-    with pytest.raises(ValueError):
-        native.decode_many(trunc, counts)
-    # metadata drift: expected count lower than the real payload
-    bad = counts.copy()
-    bad[0] -= 1
-    with pytest.raises(ValueError):
-        native.decode_many(p_ref, bad)
+    p_ref, _ = native.encode_many(starts, counts, bts, ts, vb)
+    for payloads, expected in _corruptions(p_ref, counts):
+        with pytest.raises(ValueError):
+            native.decode_many(payloads, expected)
+
+
+def test_reference_fallback_matches_native(monkeypatch, caplog):
+    """With the kernel unloaded, the entry points run the scalar
+    reference: same payloads, n_bits and decoded points as the kernel,
+    the same ValueError on corrupt input, and exactly one warning."""
+    cases = []
+    for seed, predictor in ((5, None), (6, "dfcm1024")):
+        part = _random_partition(seed)
+        enc = encode_partition(*part, predictor)
+        dec = decode_partition(enc[0], part[1], predictor)
+        errors = []
+        for payloads, expected in _corruptions(enc[0], part[1]):
+            with pytest.raises(ValueError) as e:
+                decode_partition(payloads, expected, predictor)
+            errors.append(str(e.value))
+        cases.append((part, predictor, enc, dec, errors))
+
+    monkeypatch.setattr(native, "_TRIED", True)
+    monkeypatch.setattr(native, "_LIB", None)
+    monkeypatch.setattr(native, "_WHY", "disabled by the test")
+    monkeypatch.setattr(native, "_WARNED", False)
+    with caplog.at_level(logging.WARNING, logger=native.__name__):
+        for part, predictor, enc, dec, errors in cases:
+            p_ref, bits_ref = encode_partition(*part, predictor)
+            assert p_ref == enc[0]
+            assert np.array_equal(bits_ref, enc[1])
+            for got, want in zip(decode_partition(p_ref, part[1], predictor),
+                                 dec):
+                assert got.dtype == want.dtype
+                assert np.array_equal(got, want)
+            for (payloads, expected), msg in zip(
+                    _corruptions(p_ref, part[1]), errors):
+                with pytest.raises(ValueError) as e:
+                    decode_partition(payloads, expected, predictor)
+                assert str(e.value) == msg
+    warnings = [r for r in caplog.records if r.name == native.__name__]
+    assert len(warnings) == 1
+    assert "disabled by the test" in warnings[0].getMessage()

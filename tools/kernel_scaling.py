@@ -11,7 +11,9 @@ scaling reflects the engine, not the throttle.
 
 Protocol: build W identical partition workloads; run the SAME task set
 on Pool(N) and Pool(4N); efficiency = (T_N / T_4N) / 4, best of R
-alternated reps.
+alternated reps.  Reported twice: on the native kernel, and on the
+scalar reference the codec entry point falls back to without it (over
+1/50-size partitions, since the reference is 50-800x slower).
 """
 from __future__ import annotations
 
@@ -40,9 +42,13 @@ def _make_partition(seed: int, n_groups: int = 12_000, pts_per_group: int = 46):
 _WORK = {}
 
 
-def _init(n_work: int):
+def _init(n_work: int, reference: bool = False):
+    if reference:
+        from gorilla_tsc_spark.codec import native
+        native._TRIED, native._LIB = True, None
     for w in range(n_work):
-        _WORK[w] = _make_partition(1000 + w)
+        _WORK[w] = _make_partition(
+            1000 + w, n_groups=240 if reference else 12_000)
 
 
 def _encode_task(w: int) -> int:
@@ -52,11 +58,12 @@ def _encode_task(w: int) -> int:
     return len(payloads)
 
 
-def run(procs=(2, 8), reps: int = 3, target_sec: float = 2.5) -> dict:
+def run(procs=(2, 8), reps: int = 3, target_sec: float = 2.5,
+        reference: bool = False) -> dict:
     results = {p: float("inf") for p in procs}
     pools = {}
     for p in procs:
-        pools[p] = Pool(p, initializer=_init, initargs=(4,))
+        pools[p] = Pool(p, initializer=_init, initargs=(4, reference))
         pools[p].map(_encode_task, range(p))  # warm imports
     try:
         # calibrate the per-task cost so every timed run lasts long
@@ -115,10 +122,13 @@ def host_profile() -> dict:
 
 
 if __name__ == "__main__":
+    import os
     import sys
-    sys.path.insert(0, "/root/repo")
-    out = {"kernel_wall_sec_by_procs": run()}
-    t2, t8 = out["kernel_wall_sec_by_procs"]["2"], out["kernel_wall_sec_by_procs"]["8"]
-    out["kernel_scaling_efficiency_2to8"] = round((t2 / t8) / 4, 3)
-    out["host"] = host_profile()
+    sys.path.insert(
+        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    walls = {"native": run(), "reference": run(reference=True)}
+    out = {"kernel_wall_sec_by_procs": walls,
+           "kernel_scaling_efficiency_2to8": {
+               k: round((w["2"] / w["8"]) / 4, 3) for k, w in walls.items()},
+           "host": host_profile()}
     print(json.dumps(out))
