@@ -247,11 +247,20 @@ def decode_many(payloads: list[bytes], expected: np.ndarray,
     return ts, vb, cnt
 
 
+def _value_bits(word: int) -> int:
+    """Worst-case bits of one value-only (v1/v32) value: 2 control bits,
+    the lz and sig-length header fields, then up to ``word`` bits."""
+    return 2 + (5 + 6 if word == 64 else 4 + 5) + word
+
+
 def decode_values_many(payloads: list[bytes], expected: np.ndarray, word: int):
     """Batch-decode v1 (word=64) / v32 (word=32) value-only payloads.
 
     Returns (vbits uint64, counts) or None; counts are cross-checked
-    against the ``expected`` block metadata like decode_many."""
+    against the ``expected`` block metadata like decode_many, and like
+    decode_many the buffer carries zero padding for the first raw word
+    plus expected+1 maximal values past any block start, so a truncated
+    block fails the count check without reading past the buffer."""
     lib = get_lib()
     if lib is None:
         return None
@@ -261,7 +270,9 @@ def decode_values_many(payloads: list[bytes], expected: np.ndarray, word: int):
     off = np.zeros(n, dtype=np.int64)
     if n > 1:
         np.cumsum(lens[:-1], out=off[1:])
-    buf = np.frombuffer(b"".join(payloads) + b"\x00" * 16, dtype=np.uint8)
+    pad = 16 + (word + _value_bits(word)
+                * (int(expected.max(initial=0)) + 1)) // 8
+    buf = np.frombuffer(b"".join(payloads) + bytes(pad), dtype=np.uint8)
     cap = int(expected.sum())
     vb = np.empty(cap, dtype=np.uint64)
     cnt = np.empty(n, dtype=np.int64)
@@ -289,7 +300,7 @@ def encode_values_many(starts: np.ndarray, counts: np.ndarray,
     starts = np.ascontiguousarray(starts, dtype=np.int64)
     counts = np.ascontiguousarray(counts, dtype=np.int64)
     vbits = np.ascontiguousarray(vbits, dtype=np.uint64)
-    per_val = 2 + (5 + 6 if word == 64 else 4 + 5) + word
+    per_val = _value_bits(word)
     cap_words = int(((int(counts.sum()) + G) * per_val
                      + G * (word + 64)) // 64 + 2 * G + 16)
     words = np.zeros(cap_words, dtype=np.uint64)

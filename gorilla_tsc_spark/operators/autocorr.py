@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .rollup import bucket_col
+from .rollup import bucket_col, rebuild_touched
 
 SUMMARY_COLS = ("n", "first_ts", "first_v", "last_ts", "last_v",
                 "sx", "sxx", "sadj", "n_pairs")
@@ -142,23 +142,10 @@ def refresh_autocorr_tier(tier: DataFrame, late_points: DataFrame,
     block-store read for the affected range, which prunes untouched
     blocks); only rows semi-joined to a late-touched (series, bucket)
     are scanned past the filter."""
-    kb = list(keys) + ["bucket"]
-    affected = (late_points
-                .select(*keys, bucket_col(F.col("ts_ms"), bucket_ms)
-                        .alias("bucket"))
-                .distinct())
-    cols = list(keys) + ["ts_ms", value_col]
-    merged_raw = (points.select(*cols)
-                  .unionByName(late_points.select(*cols))
-                  .withColumn("__b", bucket_col(F.col("ts_ms"), bucket_ms))
-                  .join(F.broadcast(affected.withColumnRenamed(
-                      "bucket", "__b")), on=list(keys) + ["__b"],
-                      how="leftsemi")
-                  .drop("__b"))
-    rebuilt = autocorr_tier(merged_raw, bucket_ms, value_col, keys)
-    untouched = tier.join(F.broadcast(affected), on=kb, how="left_anti")
-    out_cols = kb + list(SUMMARY_COLS)
-    return untouched.select(*out_cols).unionByName(rebuilt.select(*out_cols))
+    return rebuild_touched(
+        tier, late_points, points, bucket_ms, ("ts_ms", value_col),
+        lambda raw: autocorr_tier(raw, bucket_ms, value_col, keys),
+        SUMMARY_COLS, keys)
 
 
 def autocorr_estimates(tier: DataFrame) -> DataFrame:

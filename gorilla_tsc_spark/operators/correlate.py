@@ -39,6 +39,24 @@ from .rollup import bucket_col
 STAT_COLS = ("n", "sx", "sy", "sxx", "syy", "sxy")
 
 
+def _corr_aggs(x, y):
+    """The six pair statistics over (x, y) — shared by `corr_tier` and
+    its streaming twin, so the two are bit-equal by construction."""
+    return [F.count(F.lit(1)).alias("n"),
+            F.sum(x).alias("sx"),
+            F.sum(y).alias("sy"),
+            F.sum(x * x).alias("sxx"),
+            F.sum(y * y).alias("syy"),
+            F.sum(x * y).alias("sxy")]
+
+
+def _sum_stats(tier: DataFrame, keys, bucket) -> DataFrame:
+    """Merge corr rows sharing (keys, bucket) — every statistic is a
+    sum; the one rule behind both cascade and refresh."""
+    return (tier.groupBy(*keys, bucket.alias("bucket"))
+            .agg(*[F.sum(c).alias(c) for c in STAT_COLS]))
+
+
 def corr_tier(points: DataFrame, bucket_ms: int,
               x_col: str = "x", y_col: str = "y",
               keys=("conv_id",)) -> DataFrame:
@@ -50,12 +68,7 @@ def corr_tier(points: DataFrame, bucket_ms: int,
     paired = points.where(x.isNotNull() & y.isNotNull())
     return (paired.groupBy(
         *keys, bucket_col(F.col("ts_ms"), bucket_ms).alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.sum(x).alias("sx"),
-             F.sum(y).alias("sy"),
-             F.sum(x * x).alias("sxx"),
-             F.sum(y * y).alias("syy"),
-             F.sum(x * y).alias("sxy")))
+        .agg(*_corr_aggs(x, y)))
 
 
 def cascade_corr_tier(tier: DataFrame, from_ms: int, to_ms: int,
@@ -63,9 +76,7 @@ def cascade_corr_tier(tier: DataFrame, from_ms: int, to_ms: int,
     """Re-aggregate a finer correlation tier into a coarser one —
     exact: every statistic is a sum."""
     assert to_ms % from_ms == 0, "coarser tier must align"
-    return (tier.groupBy(
-        *keys, bucket_col(F.col("bucket"), to_ms).alias("bucket"))
-        .agg(*[F.sum(c).alias(c) for c in STAT_COLS]))
+    return _sum_stats(tier, keys, bucket_col(F.col("bucket"), to_ms))
 
 
 def refresh_corr_tier(tier: DataFrame, late_points: DataFrame,
@@ -76,9 +87,8 @@ def refresh_corr_tier(tier: DataFrame, late_points: DataFrame,
     Buckets touched by no late point pass through unchanged."""
     delta = corr_tier(late_points, bucket_ms, x_col, y_col, keys)
     cols = list(keys) + ["bucket"] + list(STAT_COLS)
-    return (tier.select(*cols).unionByName(delta.select(*cols))
-            .groupBy(*keys, "bucket")
-            .agg(*[F.sum(c).alias(c) for c in STAT_COLS]))
+    return _sum_stats(tier.select(*cols).unionByName(delta.select(*cols)),
+                      keys, F.col("bucket"))
 
 
 def corr_estimates(tier: DataFrame) -> DataFrame:

@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .rollup import bucket_col
+from .rollup import bucket_col, rebuild_touched
 
 SUMMARY_COLS = ("n", "first_ts", "last_ts", "live_ms", "max_gap_ms",
                 "interruptions")
@@ -112,23 +112,10 @@ def refresh_heartbeat_tier(tier: DataFrame, late_beats: DataFrame,
     beat SPLITS an existing gap (possibly un-counting an interruption),
     so touched buckets are rebuilt from raw beats — the same
     invalidation rule as `refresh_twa_tier`."""
-    kb = list(keys) + ["bucket"]
-    affected = (late_beats
-                .select(*keys, bucket_col(F.col("ts_ms"), bucket_ms)
-                        .alias("bucket"))
-                .distinct())
-    cols = list(keys) + ["ts_ms"]
-    merged_raw = (beats.select(*cols)
-                  .unionByName(late_beats.select(*cols))
-                  .withColumn("__b", bucket_col(F.col("ts_ms"), bucket_ms))
-                  .join(F.broadcast(affected.withColumnRenamed(
-                      "bucket", "__b")), on=list(keys) + ["__b"],
-                      how="leftsemi")
-                  .drop("__b"))
-    rebuilt = heartbeat_tier(merged_raw, bucket_ms, hb_ms, keys)
-    untouched = tier.join(F.broadcast(affected), on=kb, how="left_anti")
-    out_cols = kb + list(SUMMARY_COLS)
-    return untouched.select(*out_cols).unionByName(rebuilt.select(*out_cols))
+    return rebuild_touched(
+        tier, late_beats, beats, bucket_ms, ("ts_ms",),
+        lambda raw: heartbeat_tier(raw, bucket_ms, hb_ms, keys),
+        SUMMARY_COLS, keys)
 
 
 def heartbeat_interpolated_estimates(tier: DataFrame, bucket_ms: int,

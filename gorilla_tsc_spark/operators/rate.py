@@ -59,7 +59,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .rollup import bucket_col
+from .rollup import bucket_col, rebuild_touched
 
 SUMMARY_COLS = ("n", "first_ts", "first_v", "last_ts", "last_v",
                 "increase", "resets")
@@ -151,23 +151,10 @@ def refresh_rate_tier(tier: DataFrame, late_points: DataFrame,
     blocks); only rows semi-joined to a late-touched (series, bucket)
     are scanned past the filter.
     """
-    kb = list(keys) + ["bucket"]
-    affected = (late_points
-                .select(*keys, bucket_col(F.col("ts_ms"), bucket_ms)
-                        .alias("bucket"))
-                .distinct())
-    cols = list(keys) + ["ts_ms", value_col]
-    merged_raw = (points.select(*cols)
-                  .unionByName(late_points.select(*cols))
-                  .withColumn("__b", bucket_col(F.col("ts_ms"), bucket_ms))
-                  .join(F.broadcast(affected.withColumnRenamed(
-                      "bucket", "__b")), on=list(keys) + ["__b"],
-                      how="leftsemi")
-                  .drop("__b"))
-    rebuilt = rate_tier(merged_raw, bucket_ms, value_col, keys)
-    untouched = tier.join(F.broadcast(affected), on=kb, how="left_anti")
-    out_cols = kb + list(SUMMARY_COLS)
-    return untouched.select(*out_cols).unionByName(rebuilt.select(*out_cols))
+    return rebuild_touched(
+        tier, late_points, points, bucket_ms, ("ts_ms", value_col),
+        lambda raw: rate_tier(raw, bucket_ms, value_col, keys),
+        SUMMARY_COLS, keys)
 
 
 def rate_interpolated_estimates(tier: DataFrame,

@@ -166,3 +166,40 @@ def refresh_tier(tier: DataFrame, late_points: DataFrame, bucket_ms: int,
     value_col = value_col if value_col is not None else F.col("v")
     delta = rollup_points(late_points, bucket_ms, value_col, keys=keys)
     return merge_tiers(tier, delta, keys=keys)
+
+
+def rebuild_touched(tier: DataFrame, late_points: DataFrame,
+                    points: DataFrame, bucket_ms: int, cols, build,
+                    summary_cols, keys) -> DataFrame:
+    """Late-data refresh for the order-dependent families (time-weight,
+    heartbeat, rate, state-duration, autocorrelation) — the
+    continuous-aggregate INVALIDATION rule, held once here.
+
+    A late point interleaves with its bucket's in-order walk (it splits
+    a LOCF segment, a gap, a counter pair or an adjacency), so no
+    delta-merge can fold it in.  Instead every (series, bucket) a late
+    point touches is rebuilt by `build` from the raw on-time `points`
+    plus the late ones, and every untouched tier row passes through.
+    `points` is the raw on-time point set (in production: the
+    block-store read for the affected range, which prunes untouched
+    blocks); only rows semi-joined to a touched (series, bucket) reach
+    `build`, so cost is ∝ the affected buckets, never the tier.
+    `cols` are the point columns `build` reads beyond the series keys.
+    """
+    kb = list(keys) + ["bucket"]
+    affected = (late_points
+                .select(*keys, bucket_col(F.col("ts_ms"), bucket_ms)
+                        .alias("bucket"))
+                .distinct())
+    raw_cols = list(keys) + list(cols)
+    touched_raw = (points.select(*raw_cols)
+                   .unionByName(late_points.select(*raw_cols))
+                   .withColumn("__b", bucket_col(F.col("ts_ms"), bucket_ms))
+                   .join(F.broadcast(affected.withColumnRenamed(
+                       "bucket", "__b")), on=list(keys) + ["__b"],
+                       how="leftsemi")
+                   .drop("__b"))
+    untouched = tier.join(F.broadcast(affected), on=kb, how="left_anti")
+    out_cols = kb + list(summary_cols)
+    return (untouched.select(*out_cols)
+            .unionByName(build(touched_raw).select(*out_cols)))

@@ -297,7 +297,13 @@ def holt_anomaly(tier: DataFrame, value_col: str, halflife_ms: int,
     sm = holt_serve(tier, value_col, halflife_ms, keys=keys,
                     ts_col=ts_col, var_col="holt_var")
     w = Window.partitionBy(*list(keys)).orderBy(ts_col)
-    dt_min = (F.col(ts_col) - F.lag(ts_col).over(w)) / F.lit(60_000.0)
+    # the Holt state only advances on non-null samples, so the trend
+    # projects from the last OBSERVED row, not the previous (maybe
+    # null) one
+    last_seen = F.last(F.when(F.col(value_col).isNotNull(), F.col(ts_col)),
+                       ignorenulls=True).over(
+        w.rowsBetween(Window.unboundedPreceding, -1))
+    dt_min = (F.col(ts_col) - last_seen) / F.lit(60_000.0)
     pred = F.lag("holt").over(w) + F.lag("holt_trend").over(w) * dt_min
     pvar = F.lag("holt_var").over(w)
     seen = F.row_number().over(w) - 1

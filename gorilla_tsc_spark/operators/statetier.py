@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .rollup import bucket_col
+from .rollup import bucket_col, rebuild_touched
 
 SUMMARY_COLS = ("n", "first_ts", "first_s", "last_ts", "last_s", "durs",
                 "trans")
@@ -127,23 +127,10 @@ def refresh_state_tier(tier: DataFrame, late_points: DataFrame,
     LOCF segment and can change which state held an interval), so
     touched buckets are rebuilt from raw points — the continuous-
     aggregate invalidation rule, exactly `refresh_twa_tier`'s shape."""
-    kb = list(keys) + ["bucket"]
-    affected = (late_points
-                .select(*keys, bucket_col(F.col("ts_ms"), bucket_ms)
-                        .alias("bucket"))
-                .distinct())
-    cols = list(keys) + ["ts_ms", state_col]
-    merged_raw = (points.select(*cols)
-                  .unionByName(late_points.select(*cols))
-                  .withColumn("__b", bucket_col(F.col("ts_ms"), bucket_ms))
-                  .join(F.broadcast(affected.withColumnRenamed(
-                      "bucket", "__b")), on=list(keys) + ["__b"],
-                      how="leftsemi")
-                  .drop("__b"))
-    rebuilt = state_tier(merged_raw, bucket_ms, nstates, state_col, keys)
-    untouched = tier.join(F.broadcast(affected), on=kb, how="left_anti")
-    out_cols = kb + list(SUMMARY_COLS)
-    return untouched.select(*out_cols).unionByName(rebuilt.select(*out_cols))
+    return rebuild_touched(
+        tier, late_points, points, bucket_ms, ("ts_ms", state_col),
+        lambda raw: state_tier(raw, bucket_ms, nstates, state_col, keys),
+        SUMMARY_COLS, keys)
 
 
 def merge_state_series(tier: DataFrame, nstates: int,

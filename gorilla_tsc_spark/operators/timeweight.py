@@ -31,7 +31,7 @@ series' points are bounded — one conversation) + one groupBy with
 map-side partial aggregation; cascade = the same two steps over tier
 rows (tiny input); refresh rebuilds ONLY late-touched buckets from raw
 points (semi-join route, cost ∝ affected data — the continuous-
-aggregate invalidation rule, same as `refresh_tier`).  All whole-stage
+aggregate invalidation rule, `rollup.rebuild_touched`).  All whole-stage
 codegen; no Python on the data path.
 """
 from __future__ import annotations
@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .rollup import bucket_col
+from .rollup import bucket_col, rebuild_touched
 
 SUMMARY_COLS = ("n", "first_ts", "first_v", "last_ts", "last_v", "wsum")
 
@@ -110,23 +110,10 @@ def refresh_twa_tier(tier: DataFrame, late_points: DataFrame,
     prunes untouched blocks); only rows semi-joined to a late-touched
     (series, bucket) are scanned past the filter.
     """
-    kb = list(keys) + ["bucket"]
-    affected = (late_points
-                .select(*keys, bucket_col(F.col("ts_ms"), bucket_ms)
-                        .alias("bucket"))
-                .distinct())
-    cols = list(keys) + ["ts_ms", value_col]
-    merged_raw = (points.select(*cols)
-                  .unionByName(late_points.select(*cols))
-                  .withColumn("__b", bucket_col(F.col("ts_ms"), bucket_ms))
-                  .join(F.broadcast(affected.withColumnRenamed(
-                      "bucket", "__b")), on=list(keys) + ["__b"],
-                      how="leftsemi")
-                  .drop("__b"))
-    rebuilt = twa_tier(merged_raw, bucket_ms, value_col, keys)
-    untouched = tier.join(F.broadcast(affected), on=kb, how="left_anti")
-    out_cols = kb + list(SUMMARY_COLS)
-    return untouched.select(*out_cols).unionByName(rebuilt.select(*out_cols))
+    return rebuild_touched(
+        tier, late_points, points, bucket_ms, ("ts_ms", value_col),
+        lambda raw: twa_tier(raw, bucket_ms, value_col, keys),
+        SUMMARY_COLS, keys)
 
 
 def twa_interpolated_estimates(tier: DataFrame, bucket_ms: int,

@@ -122,16 +122,19 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
 def dedupe_turns(t: DataFrame) -> DataFrame:
     """Resolve duplicate (conv_id, turn_idx) rows deterministically:
     keep the latest ts; on equal ts keep the longer text, then the
-    lexicographically greatest (role, text, tool) — a total order, so
-    any shipper-side duplication collapses to one well-defined turn.
+    lexicographically greatest (role, text, tool), a present value
+    beating a null one — a total order, so any shipper-side
+    duplication collapses to one well-defined turn.
     One ``max_by`` over a struct: map-side partial aggregation, the
     same (conv_id,)-keyed shuffle profile as the encode that follows."""
+    ranked = []
+    for c in ("role", "text", "tool"):
+        ranked += [F.col(c).isNotNull().alias(f"has_{c}"),
+                   F.coalesce(F.col(c), F.lit("")).alias(c)]
     pick = F.struct(
         F.col("ts"),
         F.length(F.coalesce(F.col("text"), F.lit(""))).alias("tlen"),
-        F.coalesce(F.col("role"), F.lit("")).alias("role"),
-        F.coalesce(F.col("text"), F.lit("")).alias("text"),
-        F.coalesce(F.col("tool"), F.lit("")).alias("tool"))
+        *ranked)
     row = F.struct("role", "text", "tool", "ts")
     return (t.groupBy("conv_id", "turn_idx")
             .agg(F.max_by(row, pick).alias("r"))

@@ -107,33 +107,40 @@ def main() -> None:
             ap.error("--hist-band must be lo:width:nbins with width > 0 "
                      "and nbins > 0 (e.g. 24:4:16)")
 
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    from gorilla_tsc_spark.operators.autocorr import (autocorr_tier,
+                                                      cascade_autocorr_tier)
+    from gorilla_tsc_spark.operators.candle import (candle_tier,
+                                                    cascade_candle_tier)
     from gorilla_tsc_spark.operators.correlate import (cascade_corr_tier,
                                                        corr_tier)
     from gorilla_tsc_spark.operators.encode import (block_value_column,
                                                     decode_blocks)
+    from gorilla_tsc_spark.operators.exphist import (cascade_exphist_tier,
+                                                     exphist_tier)
     from gorilla_tsc_spark.operators.heartbeat import (
         cascade_heartbeat_tier, heartbeat_tier)
+    from gorilla_tsc_spark.operators.histogram import (cascade_hist_tier,
+                                                       histogram_tier)
+    from gorilla_tsc_spark.operators.rate import cascade_rate_tier, rate_tier
+    from gorilla_tsc_spark.operators.rollup import rollup_points
+    from gorilla_tsc_spark.operators.smoothing import ewma_serve, holt_serve
+    from gorilla_tsc_spark.operators.statetier import (cascade_state_tier,
+                                                       state_tier)
     from gorilla_tsc_spark.operators.timeweight import (cascade_twa_tier,
                                                         twa_tier)
+    from gorilla_tsc_spark.operators.trend import (cascade_trend_tier,
+                                                   trend_tier)
     from gorilla_tsc_spark.pipeline import read_blocks
     from gorilla_tsc_spark.session import get_spark
 
     spark = get_spark("tiers-job", cores=args.cores)
-    chans = {args.x_channel, args.y_channel, args.twa_channel}
-    if args.rate_channel:
-        chans.add(args.rate_channel)
-    if args.state_channel:
-        chans.add(args.state_channel)
-    if args.candle_channel:
-        chans.add(args.candle_channel)
-    if args.candle_vol_channel:
-        chans.add(args.candle_vol_channel)
-    if args.autocorr_channel:
-        chans.add(args.autocorr_channel)
-    if args.trend_channel:
-        chans.add(args.trend_channel)
+    chans = {args.x_channel, args.y_channel, args.twa_channel,
+             args.rate_channel, args.state_channel, args.candle_channel,
+             args.candle_vol_channel, args.autocorr_channel,
+             args.trend_channel} - {None}
     blocks = read_blocks(spark, args.warehouse).where(
         F.col("channel").isin(*chans))
     pts = (decode_blocks(blocks, args.predictor)
@@ -143,11 +150,19 @@ def main() -> None:
 
     counters: dict[str, int] = {"points_decoded": pts.count()}
 
-    def write(name: str, df) -> None:
+    def write(name: str, df) -> str:
+        """Write one tier table, counting its rows during the write."""
         path = os.path.join(args.out, name)
-        df.write.mode("overwrite").parquet(path)
-        counters[name] = spark.read.parquet(path).count()
+        rows = Observation(name)
+        (df.observe(rows, F.count(F.lit(1)).alias("n"))
+         .write.mode("overwrite").parquet(path))
+        counters[name] = rows.get["n"]
+        return path
 
+    def chan(name: str):
+        return pts.where(F.col("channel") == name)
+
+    b, c = args.bucket_ms, args.coarse_ms
     # correlation: pivot the two channels to per-turn (x, y) pairs.
     # max() (not first()) keeps the pairing deterministic if two turns
     # ever share (conv_id, ts_ms) — first() is partition-order-dependent
@@ -157,129 +172,66 @@ def main() -> None:
           .select("conv_id", "ts_ms",
                   F.col(args.x_channel).alias("x"),
                   F.col(args.y_channel).alias("y")))
-    corr_fine = corr_tier(xy, args.bucket_ms)
-    write("corr_fine", corr_fine)
-    write("corr_coarse", cascade_corr_tier(
-        spark.read.parquet(os.path.join(args.out, "corr_fine")),
-        args.bucket_ms, args.coarse_ms))
-
-    # time-weighted average over the chosen channel
-    twa_pts = pts.where(F.col("channel") == args.twa_channel)
-    write("twa_fine", twa_tier(twa_pts, args.bucket_ms))
-    write("twa_coarse", cascade_twa_tier(
-        spark.read.parquet(os.path.join(args.out, "twa_fine")),
-        args.bucket_ms, args.coarse_ms))
-
-    # heartbeat/uptime over the turn timestamps (any one channel's
-    # points carry every turn's ts; pick the twa channel)
-    write("hb_fine", heartbeat_tier(twa_pts.select("conv_id", "ts_ms"),
-                                    args.bucket_ms, args.hb_ms))
-    write("hb_coarse", cascade_heartbeat_tier(
-        spark.read.parquet(os.path.join(args.out, "hb_fine")),
-        args.bucket_ms, args.coarse_ms, args.hb_ms))
-
-    # counter rate over a monotone-counter channel, when the store has
-    # one (reset-corrected increase/resets per bucket)
+    twa_pts = chan(args.twa_channel)
+    # (name, fine tier, cascade of the written fine table or None).
+    # Heartbeat reads the twa channel's turn timestamps (any channel's
+    # points carry every turn's ts); the histograms bin the twa channel
+    # over a declared band (an operator decision, not inferred); the
+    # smoothed serve is order-dependent, so it has no cascade.
+    families = [
+        ("corr", corr_tier(xy, b), lambda t: cascade_corr_tier(t, b, c)),
+        ("twa", twa_tier(twa_pts, b), lambda t: cascade_twa_tier(t, b, c)),
+        ("hb", heartbeat_tier(twa_pts.select("conv_id", "ts_ms"), b,
+                              args.hb_ms),
+         lambda t: cascade_heartbeat_tier(t, b, c, args.hb_ms)),
+    ]
     if args.rate_channel:
-        from gorilla_tsc_spark.operators.rate import (cascade_rate_tier,
-                                                      rate_tier)
-        rate_pts = pts.where(F.col("channel") == args.rate_channel)
-        write("rate_fine", rate_tier(rate_pts, args.bucket_ms))
-        write("rate_coarse", cascade_rate_tier(
-            spark.read.parquet(os.path.join(args.out, "rate_fine")),
-            args.bucket_ms, args.coarse_ms))
-
-    # fixed-bin histogram over the twa channel, when a band is declared
-    # (the band is an operator decision — an SLO threshold grid, a
-    # latency budget — not something to infer from data)
+        families.append(("rate", rate_tier(chan(args.rate_channel), b),
+                         lambda t: cascade_rate_tier(t, b, c)))
     if hist_band:
-        from gorilla_tsc_spark.operators.histogram import (cascade_hist_tier,
-                                                           histogram_tier)
-        lo, w, nb = hist_band
-        write("hist_fine", histogram_tier(twa_pts, args.bucket_ms,
-                                          lo, w, nb))
-        write("hist_coarse", cascade_hist_tier(
-            spark.read.parquet(os.path.join(args.out, "hist_fine")),
-            args.bucket_ms, args.coarse_ms, nb))
-
-    # state-duration over a declared small state domain, when the store
-    # carries a state-code channel (LOCF time-in-state per bucket)
+        nb = hist_band[2]
+        families.append(("hist", histogram_tier(twa_pts, b, *hist_band),
+                         lambda t: cascade_hist_tier(t, b, c, nb)))
     if args.state_channel:
-        from gorilla_tsc_spark.operators.statetier import (
-            cascade_state_tier, state_tier)
-        spts = (pts.where(F.col("channel") == args.state_channel)
-                .select("conv_id", "ts_ms",
-                        F.col("v").cast("int").alias("s")))
-        write("state_fine", state_tier(spts, args.bucket_ms,
-                                       args.nstates))
-        write("state_coarse", cascade_state_tier(
-            spark.read.parquet(os.path.join(args.out, "state_fine")),
-            args.bucket_ms, args.coarse_ms, args.nstates))
-
-    # OHLCV candle over a declared price (and optional volume) channel
+        spts = chan(args.state_channel).select(
+            "conv_id", "ts_ms", F.col("v").cast("int").alias("s"))
+        families.append(("state", state_tier(spts, b, args.nstates),
+                         lambda t: cascade_state_tier(t, b, c,
+                                                      args.nstates)))
     if args.candle_channel:
-        from gorilla_tsc_spark.operators.candle import (candle_tier,
-                                                        cascade_candle_tier)
-        cpts = pts.where(F.col("channel") == args.candle_channel)
+        cpts, vol_col = chan(args.candle_channel), None
         if args.candle_vol_channel:
-            volp = (pts.where(F.col("channel") == args.candle_vol_channel)
-                    .select("conv_id", "ts_ms", F.col("v").alias("vol")))
+            volp = chan(args.candle_vol_channel).select(
+                "conv_id", "ts_ms", F.col("v").alias("vol"))
             cpts = (cpts.select("conv_id", "ts_ms", "v")
                     .join(volp, ["conv_id", "ts_ms"], "left"))
-            write("candle_fine", candle_tier(cpts, args.bucket_ms,
-                                             vol_col="vol"))
-        else:
-            write("candle_fine", candle_tier(cpts, args.bucket_ms))
-        write("candle_coarse", cascade_candle_tier(
-            spark.read.parquet(os.path.join(args.out, "candle_fine")),
-            args.bucket_ms, args.coarse_ms))
-
-    # exponential histogram over the twa channel, when a bucket count
-    # is declared (band [1, 2^nbins) — the unbounded-range complement
-    # to --hist-band's fixed linear band)
+            vol_col = "vol"
+        families.append(("candle", candle_tier(cpts, b, vol_col=vol_col),
+                         lambda t: cascade_candle_tier(t, b, c)))
     if args.exphist_nbins:
-        from gorilla_tsc_spark.operators.exphist import (
-            cascade_exphist_tier, exphist_tier)
-        write("exphist_fine", exphist_tier(twa_pts, args.bucket_ms,
-                                           args.exphist_nbins))
-        write("exphist_coarse", cascade_exphist_tier(
-            spark.read.parquet(os.path.join(args.out, "exphist_fine")),
-            args.bucket_ms, args.coarse_ms, args.exphist_nbins))
-
-    # lag-1 autocorrelation (smoothness/compressibility regime) over a
-    # declared channel, when requested
+        nx = args.exphist_nbins
+        families.append(("exphist", exphist_tier(twa_pts, b, nx),
+                         lambda t: cascade_exphist_tier(t, b, c, nx)))
     if args.autocorr_channel:
-        from gorilla_tsc_spark.operators.autocorr import (
-            autocorr_tier, cascade_autocorr_tier)
-        apts = pts.where(F.col("channel") == args.autocorr_channel)
-        write("autocorr_fine", autocorr_tier(apts, args.bucket_ms))
-        write("autocorr_coarse", cascade_autocorr_tier(
-            spark.read.parquet(os.path.join(args.out, "autocorr_fine")),
-            args.bucket_ms, args.coarse_ms))
-
-    # EWMA + Holt smoothed serve over the twa channel's fine numeric
-    # rollup, when a half-life is declared (serve-time transform, not
-    # a family: order-dependent, so it materializes as its own table)
+        families.append(("autocorr",
+                         autocorr_tier(chan(args.autocorr_channel), b),
+                         lambda t: cascade_autocorr_tier(t, b, c)))
     if args.smooth_halflife_ms:
-        from gorilla_tsc_spark.operators.rollup import rollup_points
-        from gorilla_tsc_spark.operators.smoothing import (ewma_serve,
-                                                           holt_serve)
-        t_fine = rollup_points(twa_pts, args.bucket_ms, F.col("v"))
-        write("smooth_fine", holt_serve(
-            ewma_serve(t_fine, "vsum", args.smooth_halflife_ms,
-                       var_col="ewma_var"),
-            "vsum", args.smooth_halflife_ms))
-
-    # linear trend (per-bucket OLS drift) over a declared gauge
-    # channel, when requested
+        hl = args.smooth_halflife_ms
+        smooth = holt_serve(
+            ewma_serve(rollup_points(twa_pts, b, F.col("v")), "vsum", hl,
+                       var_col="ewma_var"), "vsum", hl)
+        families.append(("smooth", smooth, None))
     if args.trend_channel:
-        from gorilla_tsc_spark.operators.trend import (cascade_trend_tier,
-                                                       trend_tier)
-        tpts = pts.where(F.col("channel") == args.trend_channel)
-        write("trend_fine", trend_tier(tpts, args.bucket_ms))
-        write("trend_coarse", cascade_trend_tier(
-            spark.read.parquet(os.path.join(args.out, "trend_fine")),
-            args.bucket_ms, args.coarse_ms))
+        families.append(("trend", trend_tier(chan(args.trend_channel), b),
+                         lambda t: cascade_trend_tier(t, b, c)))
+
+    # one fine → coarse step per family; the cascade reads the written
+    # fine table, so the coarse tier never recomputes the fine build
+    for name, fine, cascade in families:
+        fine_path = write(f"{name}_fine", fine)
+        if cascade is not None:
+            write(f"{name}_coarse", cascade(spark.read.parquet(fine_path)))
 
     pts.unpersist()
     print(json.dumps(counters))

@@ -78,6 +78,14 @@ def test_dedupe_turns_total_order(spark, tmp_path):
     # equal ts: the richer (longer-text) row wins
     assert (out.where("conv_id = 'c2' AND turn_idx = 0")
             .first()["text"] == "yo")
+    # duplicates differing only in null vs "" tool: one survivor (the
+    # present value) whichever arrives first
+    dup = [("c9", 0, "user", "hi", None, None),
+           ("c9", 0, "user", "hi", "", None)]
+    for rows in (dup, dup[::-1]):
+        t = (spark.createDataFrame(rows, clean.schema)
+             .withColumn("ts", F.lit(out.first()["ts"])).coalesce(1))
+        assert dedupe_turns(t).first()["tool"] == ""
 
 
 def test_ingested_corpus_feeds_encode(spark, tmp_path):

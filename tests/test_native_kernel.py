@@ -283,6 +283,28 @@ def test_native_decode_bounded_by_expected():
             native.decode_many(payloads, expected)
 
 
+
+@pytest.mark.parametrize("word", [64, 32])
+def test_native_valueonly_decode_bounded_by_expected(word):
+    """The value-only decode fails a truncated/corrupt payload cleanly
+    too, including a long constant block cut to its first word: the
+    zero pad decodes as one-bit repeats, so the walk to its count runs
+    far past the payload and must stay inside the padded buffer."""
+    starts, counts, _, _, vb = _random_partition(5)
+    if word == 32:
+        vb = vb & np.uint64(0xFFFFFFFF)
+    payloads, _ = native.encode_values_many(starts, counts, vb, word)
+    for bad, expected in _corruptions(payloads, counts):
+        with pytest.raises(ValueError):
+            native.decode_values_many(bad, expected, word)
+    n = 20_000
+    flat = np.repeat(vb[:1], n)
+    (long_block,), _ = native.encode_values_many(
+        np.zeros(1, np.int64), np.array([n], np.int64), flat, word)
+    with pytest.raises(ValueError):
+        native.decode_values_many([long_block[:word // 8]],
+                                  np.array([n], np.int64), word)
+
 def test_reference_fallback_matches_native(monkeypatch, caplog):
     """With the kernel unloaded, the entry points run the scalar
     reference: same payloads, n_bits and decoded points as the kernel,

@@ -297,6 +297,31 @@ def test_holt_anomaly_flags_spike_on_drifting_baseline(spark):
     assert ea[90] is False  # drift lag swallowed the spike
 
 
+
+def test_holt_anomaly_projects_across_null_gap(spark):
+    # the drifting series again, with a ten-row null gap: the Holt
+    # state holds through the gap, so the first row after it must be
+    # judged against the trend projected over the WHOLE gap (from the
+    # last observed row), not over one row — clean drift flags
+    # nothing, and the planted spike still flags.
+    from gorilla_tsc_spark.operators.smoothing import holt_anomaly
+    slope = 3.0  # per hour
+    rows = []
+    for i in range(120):
+        v = None if 60 <= i < 70 else slope * i
+        if i == 100:
+            v += 40.0
+        rows.append(("c", i * HOUR_MS, v))
+    df = spark.createDataFrame(
+        rows, "conv_id string, bucket long, vsum double")
+    out = {r["bucket"] // HOUR_MS: r
+           for r in holt_anomaly(df, "vsum", HL, k=3.0,
+                                 min_baseline=30).collect()}
+    assert out[70]["holt_pred"] == pytest.approx(slope * 70, abs=0.5)
+    assert out[100]["anomaly"] is True
+    flagged = {i for i, r in out.items() if r["anomaly"]}
+    assert flagged == {100}, flagged
+
 def test_holt_variance_carries_and_decays(spark):
     # innovation variance must decay to ~0 under clean drift (the
     # trend term explains the motion) — checked via the served column

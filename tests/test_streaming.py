@@ -230,6 +230,11 @@ def test_stream_corr_and_twa_match_batch(spark, transcripts_dir, tmp_path):
         [("__sentinel__", 0, "user", "x", None, max_ts + timedelta(days=3))],
         schema=TRANSCRIPTS_SCHEMA).write.mode("append").parquet(replay)
     stream = spark.readStream.schema(TRANSCRIPTS_SCHEMA).parquet(replay)
+    candle_want = candle_tier(batch_t.select(
+        "conv_id", F.unix_millis("ts").alias("ts_ms"),
+        F.length("text").cast("double").alias("v"),
+        F.size(F.split("text", r"\s+")).cast("double").alias("vol")),
+        HOUR_MS, vol_col="vol")
 
     for name, out, want in (
         ("corr_stream",
@@ -268,13 +273,7 @@ def test_stream_corr_and_twa_match_batch(spark, transcripts_dir, tmp_path):
              "conv_id", "ts", F.length("text").cast("double").alias("v"),
              F.size(F.split("text", r"\s+")).cast("double").alias("vol")),
              vol_col="vol", window="1 hour"),
-         candle_tier(batch_t.select(
-             "conv_id", F.unix_millis("ts").alias("ts_ms"),
-             F.length("text").cast("double").alias("v"),
-             F.size(F.split("text", r"\s+")).cast("double").alias("vol")),
-             HOUR_MS, vol_col="vol")
-         .select("conv_id", "bucket", "n", "first_ts", "open", "last_ts",
-                 "close", "high", "low", "vsum", "vol", "pvsum")),
+         candle_want),
         ("autocorr_stream",
          stream_autocorr_tier(stream.select(
              "conv_id", "ts", F.length("text").cast("double").alias("v")),
@@ -307,3 +306,15 @@ def test_stream_corr_and_twa_match_batch(spark, transcripts_dir, tmp_path):
         assert got.count() == want.count(), name
         assert got.exceptAll(want).count() == 0, name
         assert want.exceptAll(got).count() == 0, name
+
+    # streamed candle rows carry the full batch column set, so they
+    # cascade exactly like the batch rows
+    from gorilla_tsc_spark.operators.candle import cascade_candle_tier
+    from gorilla_tsc_spark.operators.rollup import DAY_MS
+    got_day = cascade_candle_tier(
+        spark.sql("SELECT * FROM candle_stream")
+        .where(F.col("conv_id") != "__sentinel__"), HOUR_MS, DAY_MS)
+    want_day = cascade_candle_tier(candle_want, HOUR_MS, DAY_MS)
+    assert got_day.count() == want_day.count()
+    assert got_day.exceptAll(want_day).count() == 0
+    assert want_day.exceptAll(got_day).count() == 0
