@@ -29,7 +29,11 @@ at 100 TB the nightly audit reads a few percent, rotating by seed.
 
 The audit is read-only and embarrassingly parallel: no shuffle at all
 — metadata checks are scan-side expressions, the decode check is a
-narrow mapInPandas over the same partitioning the scan provides.
+narrow mapInPandas over the same partitioning the scan provides, and
+``pipeline.read_blocks`` is a plain scan (plan pinned in
+tests/test_plan_budget.py).  The kernel decodes a whole Arrow batch in
+one native call and derives ok_decode/ok_aggs with segment reductions
+over the flat decode.
 """
 from __future__ import annotations
 
@@ -66,6 +70,49 @@ def _decode_one(payload: bytes, expected: int, predictor: str | None):
         return None
 
 
+def _feq(x: np.ndarray, y: np.ndarray) -> np.ndarray:
+    # NaN aggregates of NaN data are valid; NaN != NaN would false-flag
+    # them
+    return (x == y) | (np.isnan(x) & np.isnan(y))
+
+
+def _decode_flags(pdf: pd.DataFrame, ts: np.ndarray, vb: np.ndarray,
+                  lens: np.ndarray):
+    """ok_decode and ok_aggs of every block of a batch from its decoded
+    points (ts / value words of all blocks concatenated, ``lens`` per
+    block), as segment reductions over the flat arrays."""
+    expected = pdf["n_points"].to_numpy(np.int64)
+    has = lens > 0
+    starts = (np.cumsum(lens) - lens)[has]
+    ends_ok = np.ones(len(lens), dtype=bool)
+    ends_ok[has] = ((ts[starts] == pdf["first_ts"].to_numpy(np.int64)[has])
+                    & (ts[starts + lens[has] - 1]
+                       == pdf["last_ts"].to_numpy(np.int64)[has]))
+    ok_decode = (lens == expected) & ends_ok
+
+    ok_cnt = pdf["agg_cnt"].to_numpy() == lens
+    ok_vals = np.zeros(len(lens), dtype=bool)
+    if has.any():
+        is_double = np.repeat(pdf["kind"].to_numpy() == "double", lens)
+        vals = np.where(is_double, vb.view(np.float64),
+                        vb.view(np.int64).astype(np.float64))
+        a_min, a_max, a_sum = (pdf[c].to_numpy(np.float64)[has]
+                               for c in ("agg_min", "agg_max", "agg_sum"))
+        # np.add.reduceat is the sequential fold every encode kernel
+        # uses — ndarray.sum's pairwise algorithm differs in the last
+        # ulp on 2^63-magnitude data
+        ok_vals[has] = (_feq(a_min, np.minimum.reduceat(vals, starts))
+                        & _feq(a_max, np.maximum.reduceat(vals, starts))
+                        & _feq(a_sum, np.add.reduceat(vals, starts)))
+    # a streaming seal pre-compaction (promote_stream_blocks leaves
+    # min/max/sum SQL-NULL by design) checks its count only; a genuine
+    # NaN aggregate is NOT exempt — the JVM-side agg_is_null flag
+    # distinguishes them, since Arrow renders both as NaN here
+    ok_aggs = np.where(pdf["agg_is_null"].to_numpy(bool), ok_cnt,
+                       has & ok_cnt & ok_vals)
+    return ok_decode, ok_aggs
+
+
 def _audit_iter(pdf_iter, predictor: str | None = None):
     for pdf in pdf_iter:
         n = len(pdf)
@@ -73,62 +120,22 @@ def _audit_iter(pdf_iter, predictor: str | None = None):
             continue
         payloads = [bytes(p) for p in pdf["payload"]]
         expected = pdf["n_points"].to_numpy(np.int64)
-        first = pdf["first_ts"].to_numpy(np.int64)
-        last = pdf["last_ts"].to_numpy(np.int64)
-
-        ok_decode = np.zeros(n, dtype=bool)
-        ok_aggs = np.zeros(n, dtype=bool)
+        decoded = np.ones(n, dtype=bool)
         try:
-            ts_all, vb_all, lens = decode_partition(payloads, expected,
-                                                    predictor)
-            bounds = np.concatenate(([0], np.cumsum(lens)))
-            decoded = [(ts_all[bounds[i]:bounds[i + 1]],
-                        vb_all[bounds[i]:bounds[i + 1]]) for i in range(n)]
+            ts, vb, lens = decode_partition(payloads, expected, predictor)
         except Exception:
             # a corrupt member fails the batch: isolate per block so
             # one bad payload can't mask its neighbours
-            decoded = [_decode_one(payloads[i], int(expected[i]), predictor)
-                       for i in range(n)]
-
-        kinds = pdf["kind"].to_numpy()
-        a_cnt = pdf["agg_cnt"].to_numpy()
-        a_null = pdf["agg_is_null"].to_numpy(bool)
-        a_min = pdf["agg_min"].to_numpy()
-        a_max = pdf["agg_max"].to_numpy()
-        a_sum = pdf["agg_sum"].to_numpy()
-        for i, d in enumerate(decoded):
-            if d is None:
-                continue
-            ts, vb = d
-            ok_decode[i] = (len(ts) == expected[i]
-                            and (len(ts) == 0
-                                 or (int(ts[0]) == first[i]
-                                     and int(ts[-1]) == last[i])))
-            if a_null[i]:             # streaming seal pre-compaction
-                # (promote_stream_blocks leaves min/max/sum SQL-NULL by
-                # design; a genuine NaN aggregate is NOT exempt — the
-                # JVM-side agg_is_null flag distinguishes them, since
-                # Arrow renders both as NaN here).  Counts must still
-                # be consistent even on a sealed-not-compacted block.
-                ok_aggs[i] = int(a_cnt[i]) == len(ts)
-                continue
-            vals = (vb.view(np.float64) if kinds[i] == "double"
-                    else vb.view(np.int64).astype(np.float64))
-            # sequential fold (np.add.reduceat), the same summation
-            # order every encode kernel uses — ndarray.sum's pairwise
-            # algorithm differs in the last ulp on 2^63-magnitude data
-            def _feq(x, y):
-                # NaN aggregates of NaN data are valid; NaN != NaN
-                # would false-flag them
-                return bool(x == y or (np.isnan(x) and np.isnan(y)))
-
-            ok_aggs[i] = bool(
-                len(vals)
-                and int(a_cnt[i]) == len(vals)
-                and _feq(np.float64(a_min[i]), vals.min())
-                and _feq(np.float64(a_max[i]), vals.max())
-                and _feq(np.float64(a_sum[i]),
-                         np.add.reduceat(vals, [0])[0]))
+            parts = [_decode_one(payloads[i], int(expected[i]), predictor)
+                     for i in range(n)]
+            decoded = np.array([d is not None for d in parts])
+            good = [d for d in parts if d is not None]
+            ts = np.concatenate([d[0] for d in good] + [np.zeros(0, np.int64)])
+            vb = np.concatenate([d[1] for d in good] + [np.zeros(0, np.uint64)])
+            lens = np.array([len(d[0]) if d is not None else 0
+                             for d in parts], dtype=np.int64)
+        ok_decode, ok_aggs = _decode_flags(pdf, ts, vb,
+                                           np.asarray(lens, np.int64))
 
         yield pd.DataFrame({
             "conv_id": pdf["conv_id"].to_numpy(),
@@ -138,8 +145,8 @@ def _audit_iter(pdf_iter, predictor: str | None = None):
             "ok_crc": pdf["ok_crc"].to_numpy(bool),
             "ok_len": pdf["ok_len"].to_numpy(bool),
             "ok_span": pdf["ok_span"].to_numpy(bool),
-            "ok_decode": ok_decode,
-            "ok_aggs": ok_aggs,
+            "ok_decode": ok_decode & decoded,
+            "ok_aggs": ok_aggs & decoded,
         })
 
 def audit_blocks(blocks: DataFrame, sample_pct: float = 100.0,

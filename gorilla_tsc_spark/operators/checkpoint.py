@@ -7,10 +7,14 @@ encode kernel runs, so completed blocks are never re-encoded (north
 rule). The completed-keys side is tiny (one row per block) and is
 broadcast, so pruning never shuffles the big side.
 
-Crash window note: a failure between "blocks written" and "checkpoint
-row appended" re-encodes that group on resume; encode is deterministic,
-and ``read_blocks`` dedupes on block identity, so the pipeline stays
-idempotent (on Iceberg the write+log pair becomes one transaction).
+Crash window note: ``pipeline.encode_stage`` writes a run's blocks to
+``_staging/<run_id>``, appends their lineage from the staged rows,
+then moves the staged files into the store.  The next run finishes a
+commit that crashed: staged rows whose group is already logged are
+filtered by ``pending``, so no block gets a second lineage row, and a
+write that died before any part file landed leaves its groups pending
+for re-encode.  Each block identity is stored once and readers never
+dedupe (on Iceberg the write+log pair becomes one transaction).
 """
 from __future__ import annotations
 

@@ -6,9 +6,22 @@ read → sub-blocked shuffle → applyInPandas encode → write blocks +
 checkpoints → tier cascade → gap-fill → write tiers + checkpoints →
 retention expiry. A killed job rerun with the same warehouse resumes:
 completed encode groups are anti-joined away BEFORE the kernel runs.
+
+Crash window: ``encode_stage`` commits a run's blocks in three steps —
+write them to ``<warehouse>/_staging/<run_id>/``, log their lineage
+from the staged rows, move the staged part files into
+``gorilla_blocks/``.  A run that dies anywhere in between leaves its
+staging directory behind, and the next ``encode_stage`` on the
+warehouse finishes it (logs what is not logged yet, moves what is not
+moved yet) before it plans its own pending work.  A block identity is
+therefore stored once, so ``read_blocks`` and every job that reads the
+store is a plain scan.  The contract is one writer per warehouse at a
+time.
 """
 from __future__ import annotations
 
+import os
+import shutil
 import time
 from dataclasses import dataclass
 
@@ -16,9 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.channels import Channel, default_channels
-from .operators.checkpoint import BLOCK_ID_COLS, CheckpointLog, points_group_key_col
+from .operators.checkpoint import CheckpointLog, group_key_col, points_group_key_col
 from .operators.encode import (
-    BLOCKS_SCHEMA,
     block_value_column,
     decode_blocks,
     encode_points,
@@ -31,8 +43,28 @@ from .sources.tables import read_tier, write_tier
 
 
 def read_blocks(spark: SparkSession, warehouse: str) -> DataFrame:
-    """Blocks tier, deduped on block identity (crash-window idempotency)."""
-    return read_tier(spark, warehouse, "gorilla_blocks").dropDuplicates(BLOCK_ID_COLS)
+    """Blocks tier: a plain scan (``encode_stage`` stores each block
+    identity once)."""
+    return read_tier(spark, warehouse, "gorilla_blocks")
+
+
+def _commit_staged(spark: SparkSession, log: CheckpointLog, staged_dir: str,
+                   store: str) -> None:
+    """Log lineage for the staged blocks whose group is not logged yet,
+    move the staged part files into the store, drop the staging
+    directory.  Rerunning it after a crash at any step completes the
+    commit.  Only top-level part files count: a Spark write that died
+    leaves its tasks' output under ``_temporary``, and those groups are
+    simply still pending."""
+    files = sorted(f for f in os.listdir(staged_dir) if f.endswith(".parquet"))
+    if files:
+        staged = spark.read.parquet(*(os.path.join(staged_dir, f) for f in files))
+        fresh = log.pending(staged.withColumn("part_key", group_key_col()), "encode")
+        log.log_blocks(fresh.drop("part_key"), "encode")
+        os.makedirs(store, exist_ok=True)
+        for f in files:
+            os.replace(os.path.join(staged_dir, f), os.path.join(store, f))
+    shutil.rmtree(staged_dir)
 
 
 @dataclass
@@ -54,19 +86,32 @@ def encode_stage(
     points_per_block: int,
     resume: bool,
 ) -> DataFrame:
+    """Encode the groups not stored yet and commit them to the block
+    store through ``_staging/<run_id>`` (see the module docstring);
+    returns the whole store.  ``resume=False`` runs the kernel over
+    every group but still appends only identities not stored yet."""
     log = CheckpointLog(spark, warehouse)
+    store = os.path.join(warehouse, "gorilla_blocks")
+    staging = os.path.join(warehouse, "_staging")
+    # finish crashed runs first: the pending anti-join below fixes its
+    # checkpoint file listing when it is planned
+    if os.path.isdir(staging):
+        for run in sorted(os.listdir(staging)):
+            _commit_staged(spark, log, os.path.join(staging, run), store)
+
+    def pending(df, key):
+        return log.pending(df.withColumn("part_key", key), "encode").drop("part_key")
+
     pts = points_for_encode(transcripts, channels, points_per_block)
     if resume:
-        pts = log.pending(
-            pts.withColumn("part_key", points_group_key_col()), "encode"
-        ).drop("part_key")
+        pts = pending(pts, points_group_key_col())
     blocks = encode_points(pts, channels, predictor)
-    blocks.write.mode("append").parquet(f"{warehouse}/gorilla_blocks")
-    # lineage for exactly the rows this run appended = written minus done
-    written = read_blocks(spark, warehouse)
-    from .operators.checkpoint import group_key_col
-    fresh = log.pending(written.withColumn("part_key", group_key_col()), "encode")
-    log.log_blocks(fresh.drop("part_key"), "encode")
+    if not resume:
+        blocks = pending(blocks, group_key_col())
+    staged_dir = os.path.join(staging, log.run_id)
+    blocks.write.parquet(staged_dir)
+    _commit_staged(spark, log, staged_dir, store)
+    os.rmdir(staging)  # empty under the single-writer contract
     return read_blocks(spark, warehouse)
 
 
@@ -110,8 +155,11 @@ def run_pipeline(
     log.log_rows([{"stage": "gapfill", "part_key": "1m"}])
 
     # stage R: retention expiry (deterministic 'now' = max data ts);
-    # an empty store has no 'now' and nothing to expire
-    now_ms = written.agg(F.max("last_ts")).first()[0]
+    # an empty store has no 'now' and nothing to expire.  The result
+    # counters come from the same pass over the store.
+    now_ms, n_blocks, n_points, payload_bytes = written.agg(
+        F.max("last_ts"), F.count(F.lit(1)), F.sum("n_points"),
+        F.sum(F.length("payload"))).first()
     if now_ms is None:
         now_ms = 0
     for tier_name, keep in (("rollup_1m", policy.keep_1m_days),
@@ -121,13 +169,11 @@ def run_pipeline(
         write_tier(pruned, warehouse, f"{tier_name}_retained", mode="overwrite")
     log.log_rows([{"stage": "retention", "part_key": "all"}])
 
-    stats = written.agg(
-        F.count(F.lit(1)), F.sum("n_points"), F.sum(F.length("payload"))).first()
     return PipelineResult(
         blocks_path=f"{warehouse}/gorilla_blocks",
         tier_paths={t: f"{warehouse}/{t}" for t in
                     ("rollup_1m", "rollup_1h", "rollup_1d", "rollup_1m_filled")},
-        n_blocks=stats[0], n_points=stats[1] or 0, payload_bytes=stats[2] or 0,
+        n_blocks=n_blocks, n_points=n_points or 0, payload_bytes=payload_bytes or 0,
         wall_sec=time.time() - t0,
     )
 

@@ -10,9 +10,13 @@
 - gap-fill inserts the right buckets; locf carries values.
 - resume: a second run encodes zero new blocks; a partial first run
   encodes only the missing ones.
+- crash windows of the staged block commit (staged not logged, logged
+  and partly moved, Spark ``_temporary`` debris) and a ``resume=False``
+  rerun: each identity is stored once with one lineage row.
 """
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -204,3 +208,106 @@ def test_register_views_sql_surface(spark, transcripts, tmp_path_factory):
         f"WHERE last_ts >= {lo} AND first_ts < {lo + 86_400_000}").first()
     total_b = spark.sql("SELECT count(*) AS b FROM g_blocks").first()["b"]
     assert 0 < pruned["b"] <= total_b and pruned["p"] > 0
+
+
+# -- crash windows of the staged block commit ------------------------------
+
+@pytest.fixture(scope="module")
+def clean_1m(spark, transcripts, tmp_path_factory):
+    wh = str(tmp_path_factory.mktemp("warehouse_clean"))
+    run_pipeline(spark, transcripts, wh, points_per_block=256)
+    return spark.read.parquet(f"{wh}/rollup_1m").cache()
+
+
+def _first_half(transcripts):
+    return transcripts.where(F.col("conv_id") < "conv00000020")
+
+
+def assert_committed_once(spark, wh, clean_1m):
+    """Each identity stored once, one encode lineage row per block, the
+    1m tier equal to a clean run's, no staging left behind."""
+    from gorilla_tsc_spark.operators.checkpoint import (BLOCK_ID_COLS,
+                                                        group_key_col)
+    stored = spark.read.parquet(f"{wh}/gorilla_blocks")   # physical rows
+    n = stored.count()
+    assert n > 0 and n == stored.select(*BLOCK_ID_COLS).distinct().count()
+    ids = stored.select(group_key_col().alias("part_key"),
+                        F.col("channel").alias("detail"))
+    lineage = (CheckpointLog(spark, wh).read()
+               .where(F.col("stage") == "encode").select("part_key", "detail"))
+    assert lineage.count() == n
+    assert lineage.exceptAll(ids).count() == 0
+    assert ids.exceptAll(lineage).count() == 0
+    got = spark.read.parquet(f"{wh}/rollup_1m")
+    assert got.exceptAll(clean_1m).count() == 0
+    assert clean_1m.exceptAll(got).count() == 0
+    assert not os.path.exists(os.path.join(wh, "_staging"))
+
+
+def _crash_before_log(spark, transcripts, wh, monkeypatch):
+    """Staged, not logged: the lineage write fails."""
+    def boom(*a, **k):
+        raise RuntimeError("killed before lineage")
+    monkeypatch.setattr(CheckpointLog, "log_blocks", boom)
+    with pytest.raises(RuntimeError):
+        run_pipeline(spark, transcripts, wh, points_per_block=256)
+    staged = os.listdir(os.path.join(wh, "_staging"))
+    assert len(staged) == 1
+    assert not os.path.exists(f"{wh}/checkpoints")
+
+
+def _crash_mid_move(spark, transcripts, wh, monkeypatch):
+    """Logged, part of the staged files moved: the second move fails."""
+    run_pipeline(spark, _first_half(transcripts), wh, points_per_block=256)
+    before = len(os.listdir(f"{wh}/gorilla_blocks"))
+    real, calls = os.replace, []
+
+    def flaky(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise OSError("killed mid-move")
+        real(src, dst)
+    monkeypatch.setattr(os, "replace", flaky)
+    # several part files per run, so the crash lands between two moves
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try:
+        with pytest.raises(OSError):
+            run_pipeline(spark, transcripts, wh, points_per_block=256)
+    finally:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    assert len(os.listdir(f"{wh}/gorilla_blocks")) == before + 1
+    (run,) = os.listdir(os.path.join(wh, "_staging"))
+    assert any(f.endswith(".parquet")
+               for f in os.listdir(os.path.join(wh, "_staging", run)))
+
+
+def _crash_in_write(spark, transcripts, wh, monkeypatch):
+    """Only Spark ``_temporary`` debris left: task output of a write
+    that died before its job commit (the same identities a rerun
+    encodes, so committing it would duplicate them)."""
+    from gorilla_tsc_spark.operators.encode import encode_blocks
+    run_pipeline(spark, _first_half(transcripts), wh, points_per_block=256)
+    encode_blocks(transcripts, points_per_block=256).write.parquet(
+        os.path.join(wh, "_staging", "deadrun", "_temporary", "0"))
+
+
+@pytest.mark.parametrize("crash", [_crash_before_log, _crash_mid_move,
+                                   _crash_in_write],
+                         ids=["staged_not_logged", "logged_part_moved",
+                              "temporary_debris"])
+def test_crash_window_rerun_commits_once(spark, transcripts, clean_1m,
+                                         tmp_path, monkeypatch, crash):
+    wh = str(tmp_path / "wh")
+    crash(spark, transcripts, wh, monkeypatch)
+    monkeypatch.undo()
+    assert os.path.isdir(os.path.join(wh, "_staging"))
+    run_pipeline(spark, transcripts, wh, points_per_block=256)
+    assert_committed_once(spark, wh, clean_1m)
+
+
+def test_no_resume_rerun_appends_no_stored_identity(spark, transcripts,
+                                                    clean_1m, tmp_path):
+    wh = str(tmp_path / "wh")
+    run_pipeline(spark, _first_half(transcripts), wh, points_per_block=256)
+    run_pipeline(spark, transcripts, wh, points_per_block=256, resume=False)
+    assert_committed_once(spark, wh, clean_1m)

@@ -279,6 +279,47 @@ def test_family_production_plans(spark):
         spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
+def test_job_read_paths_scan_only(spark, tmp_path_factory):
+    """Plan shape of the job read paths over a pipeline-written
+    warehouse: the audit and the serve read are plain scans of the
+    block store (no hash exchange; the serve read's conv-id broadcast
+    is allowed), and compaction shuffles exactly once, keyed
+    (conv_id, channel)."""
+    import re
+
+    from gorilla_tsc_spark.functions.channels import default_channels
+    from gorilla_tsc_spark.operators.audit import audit_blocks
+    from gorilla_tsc_spark.operators.compact import compact_blocks
+    from gorilla_tsc_spark.operators.retention import read_range
+    from gorilla_tsc_spark.operators.rollup import DAY_MS
+    from gorilla_tsc_spark.pipeline import read_blocks, run_pipeline
+    from gorilla_tsc_spark.queries import _transcripts
+
+    wh = str(tmp_path_factory.mktemp("plan_wh"))
+    run_pipeline(spark, _transcripts(spark, SF).limit(2_000), wh,
+                 channels=default_channels()[:2])
+
+    def hash_exchanges(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
+
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        blocks = read_blocks(spark, wh)
+        ids = spark.createDataFrame([("conv00000001",)], ["conv_id"])
+        t0 = 1_704_672_000_000
+        got = {name: hash_exchanges(df) for name, df in (
+            ("audit", audit_blocks(blocks)),
+            ("read_range", read_range(blocks, t0, t0 + DAY_MS, conv_ids=ids)),
+            ("compact", compact_blocks(blocks)))}
+        assert {name: len(keys) for name, keys in got.items()} == {
+            "audit": 0, "read_range": 0, "compact": 1}, got
+        assert re.fullmatch(r"conv_id#\d+, channel#\d+, \d+",
+                            got["compact"][0]), got
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
 def test_registry_exactly_50_all_oracled():
     """The driver records at most 50 registry entries; every slot must
     be used and every entry must carry an oracle (the consolidation
