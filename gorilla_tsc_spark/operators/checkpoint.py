@@ -5,7 +5,13 @@ block, a tier partition) to an append-only checkpoint table. Resuming a
 killed job anti-joins the work list against completed keys BEFORE the
 encode kernel runs, so completed blocks are never re-encoded (north
 rule). The completed-keys side is tiny (one row per block) and is
-broadcast, so pruning never shuffles the big side.
+broadcast, so pruning never shuffles the big side; with no log yet
+there is nothing to prune and the work list passes through unjoined.
+
+Every frame the log builds on the driver (an empty log, the rows of
+``log_rows``) comes from a ``pyarrow.Table``, so it plans a
+``LocalRelation``: a frame built from a Python list plans an RDD scan
+whose every action runs one Python task per core, rows or not.
 
 Crash window note: ``pipeline.encode_stage`` writes a run's blocks to
 ``_staging/<run_id>``, appends their lineage from the staged rows,
@@ -22,6 +28,7 @@ import os
 import time
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -62,10 +69,15 @@ class CheckpointLog:
         return os.path.exists(self.path) and any(
             f.endswith(".parquet") for f in os.listdir(self.path))
 
+    def _frame(self, rows: list[dict]) -> DataFrame:
+        cols = {f.name: [r.get(f.name) for r in rows]
+                for f in CHECKPOINT_SCHEMA.fields}
+        return self.spark.createDataFrame(pa.table(cols), CHECKPOINT_SCHEMA)
+
     def read(self) -> DataFrame:
         if not self._exists():
-            return self.spark.createDataFrame([], CHECKPOINT_SCHEMA)
-        return self.spark.read.parquet(self.path)
+            return self._frame([])
+        return self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.path)
 
     def completed_keys(self, stage: str) -> DataFrame:
         return (
@@ -76,6 +88,8 @@ class CheckpointLog:
         )
 
     def pending(self, work: DataFrame, stage: str, key_col: str = "part_key") -> DataFrame:
+        if not self._exists():
+            return work
         done = self.completed_keys(stage).withColumnRenamed("part_key", key_col)
         return work.join(F.broadcast(done), on=key_col, how="left_anti")
 
@@ -96,12 +110,8 @@ class CheckpointLog:
         rows.write.mode("append").parquet(self.path)
 
     def log_rows(self, rows: list[dict]) -> None:
-        df = self.spark.createDataFrame(
-            [(r["stage"], r["part_key"], r.get("detail"), r.get("n_points", 0),
-              r.get("bytes", 0), r.get("crc", 0),
-              r.get("wall_ms", int(time.time() * 1000)),
-              r.get("status", "ok"), self.run_id)
-             for r in rows],
-            CHECKPOINT_SCHEMA,
-        )
-        df.write.mode("append").parquet(self.path)
+        now = int(time.time() * 1000)
+        defaults = {"n_points": 0, "bytes": 0, "crc": 0, "wall_ms": now,
+                    "status": "ok"}
+        self._frame([{**defaults, **r, "run_id": self.run_id} for r in rows]
+                    ).write.mode("append").parquet(self.path)

@@ -153,7 +153,9 @@ def compact_blocks(blocks: DataFrame,
     At warehouse scale this runs as a maintenance job over one
     partition of the block store at a time (e.g. per conv_id bucket);
     block metadata (first_ts/n_points) is all the planner needs — the
-    payload bytes move exactly once.
+    payload bytes move exactly once.  AQE coalesces that shuffle to a
+    partition count that fits its bytes; ``shuffle_partitions`` pins
+    the count instead.
 
     ``drop_range=(t0_ms, t1_ms)`` additionally drops every decoded
     point with t0 <= ts < t1 before re-encoding — the copy-on-write
@@ -167,11 +169,12 @@ def compact_blocks(blocks: DataFrame,
     the late value survives.  Equal-ts runs with no late member pass
     through untouched.
     """
-    n = shuffle_partitions or int(
-        blocks.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # a numbered repartition is never coalesced, and each Python task
+    # of the kernel costs a fixed ~0.25 CPU-s (4-core host), rows or not
+    n = () if shuffle_partitions is None else (shuffle_partitions,)
     arranged = (blocks
                 .select(*[f.name for f in BLOCKS_SCHEMA.fields])
-                .repartition(n, "conv_id", "channel")
+                .repartition(*n, "conv_id", "channel")
                 .sortWithinPartitions("conv_id", "channel", "first_ts", "seq"))
     return arranged.mapInPandas(
         lambda it: _compact_iter(it, drop_range, predictor, lww_late_seq),

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..codec.batch import decode_partition, encode_partition, group_runs
+from ..codec.batch import decode_partition, encode_partition
 from ..functions.channels import Channel, default_channels
 
 DAY_MS = 86_400_000
@@ -201,99 +201,14 @@ def _encode_channels(chans, column, conv_id, block_ts, seq, starts, counts,
     return pd.concat(frames) if len(frames) > 1 else frames[0]
 
 
-def _make_batch_kernel(channels: list[Channel]):
-    """Partition-level kernel: one Python call per PARTITION, not per
-    group — every block of the batch goes through one
-    codec/batch.encode_partition call."""
-    chans = [(c.name, c.kind) for c in channels]
-
-    def kernel(pdf_iter):
-        # stream Arrow batches with a carry for the boundary run (same
-        # pattern as compact._compact_iter): only the final (conv, day,
-        # seq) run of each batch is held back, so a multi-GB partition
-        # never materializes in one pandas frame
-        carry = None
-        for pdf in pdf_iter:
-            if carry is not None:
-                pdf = pd.concat((carry, pdf), ignore_index=True)
-                carry = None
-            if not len(pdf):
-                continue
-            conv = pdf["conv_id"].to_numpy()
-            day_a = pdf["day"].to_numpy()
-            seq_a = pdf["seq"].to_numpy()
-            last = ((conv == conv[-1]) & (day_a == day_a[-1])
-                    & (seq_a == seq_a[-1]))
-            tail0 = len(pdf) - int(last[::-1].argmin()) \
-                if not last.all() else 0
-            carry = pdf.iloc[tail0:].reset_index(drop=True)
-            head = pdf.iloc[:tail0]
-            if len(head):
-                yield _encode_pdf(head)
-        if carry is not None and len(carry):
-            yield _encode_pdf(carry)
-
-    def _encode_pdf(pdf):
-        conv_codes, conv_uniques = pd.factorize(pdf["conv_id"])
-        day = pdf["day"].to_numpy(np.int64)
-        seq = pdf["seq"].to_numpy(np.int64)
-        # sorted input ⇒ contiguous runs; day < 2^16 until year 2149,
-        # seq ≤ 2^15 (int32 turn_idx / 65536).  Out-of-range keys would
-        # silently merge/split runs, so refuse them loudly.
-        if day.min() < 0 or day.max() >= 1 << 16:
-            raise ValueError(
-                f"day bucket out of range [0, 65536): "
-                f"[{day.min()}, {day.max()}] — pre-1970 or post-2149 "
-                f"timestamps are not encodable by the packed kernel")
-        if len(conv_uniques) >= 1 << 24:
-            raise ValueError(
-                f"{len(conv_uniques)} conversations in one partition "
-                f"overflows the 24-bit run-key slot; repartition finer")
-        if seq.min() < 0 or seq.max() >= 1 << 16:
-            # seq = turn_idx // points_per_block; a small caller-chosen
-            # block size with large turn_idx would bleed into the day
-            # bit-field and silently merge blocks across days
-            raise ValueError(
-                f"seq out of range [0, 65536): [{seq.min()}, {seq.max()}]"
-                f" — raise points_per_block (seq = turn_idx // ppb)")
-        key = (conv_codes.astype(np.int64) << 40) | (day << 16) | seq
-        starts, counts = group_runs(key)
-        return _encode_channels(
-            chans, lambda name: pdf[f"ch_{name}"].to_numpy(),
-            np.asarray(conv_uniques)[conv_codes[starts]],
-            day[starts] * DAY_MS, seq[starts].astype(np.int32),
-            starts, counts, pdf["ts_ms"].to_numpy(np.int64))
-
-    return kernel
-
-
 def encode_blocks(transcripts: DataFrame, channels: list[Channel] | None = None,
                   predictor: str | None = None, points_per_block: int = 65_536,
                   shuffle_partitions: int | None = None,
-                  clustered: bool = False, span: str = "day") -> DataFrame:
-    """transcripts → gorilla_blocks. One shuffle, keyed (conv_id, day, seq).
-
-    Unless ``clustered``, every predictor runs the packed JVM-grouping
-    kernel (``encode_points``).
-
-    ``clustered=True`` declares that each conversation's rows already
-    live inside one input partition (an Iceberg/parquet table bucketed
-    by conv_id, or any conv-contiguous layout with file splitting
-    bounded to whole files). The encode then runs SHUFFLE-FREE: a
-    partition-local sort feeds the batch kernel directly — at warehouse
-    scale this removes the only full-data exchange in the pipeline,
-    which is exactly why the transcripts table should be bucketed by
-    conv_id. The caller is responsible for the clustering invariant
-    (violating it splits a (conv, day, seq) block across partitions —
-    decodable but non-canonical).
-    """
+                  span: str = "day") -> DataFrame:
+    """transcripts → gorilla_blocks. One shuffle, keyed (conv_id, day, seq),
+    into the packed JVM-grouping kernel (``encode_points``)."""
     channels = channels or default_channels()
     pts = points_for_encode(transcripts, channels, points_per_block, span=span)
-    if clustered and predictor in (None, "last_value") and span == "day":
-        arranged = pts.sortWithinPartitions(
-            "conv_id", "day", "seq", "turn_idx", "ts_ms").drop("turn_idx")
-        return arranged.mapInPandas(
-            _make_batch_kernel(channels), schema=BLOCKS_SCHEMA)
     return encode_points(pts, channels, predictor, shuffle_partitions, span=span)
 
 

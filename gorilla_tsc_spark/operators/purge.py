@@ -34,6 +34,7 @@ decode/re-encode kernels as compaction.
 """
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -44,11 +45,11 @@ def _ids_df(df: DataFrame, conv_ids) -> DataFrame:
     """Normalize the purge set to a single-column (conv_id) DataFrame."""
     if isinstance(conv_ids, DataFrame):
         return conv_ids.select("conv_id").distinct()
-    spark = df.sparkSession
-    # explicit schema: an empty purge set must be a clean no-op, not a
-    # schema-inference crash
-    return spark.createDataFrame([(c,) for c in conv_ids],
-                                 "conv_id string")
+    # a typed Arrow column: an empty purge set is a clean no-op, not a
+    # schema-inference crash, and the frame plans a LocalRelation (a
+    # list-built frame runs a Python task per core on every action)
+    return df.sparkSession.createDataFrame(
+        pa.table({"conv_id": pa.array(list(conv_ids), pa.string())}))
 
 
 def purge_conversations(df: DataFrame, conv_ids) -> DataFrame:

@@ -55,6 +55,11 @@ def read_range(blocks: DataFrame, t0_ms: int, t1_ms: int,
     conv_id-bucketed layout).  Decoded points are then trimmed to the
     exact range (blocks straddling a boundary contribute partial
     ranges).
+
+    Build ``conv_ids`` from pandas or a ``pyarrow.Table`` (it then plans
+    a ``LocalRelation``).  A frame built from a Python list plans an
+    RDD scan: each read then first runs a Python job of
+    ``defaultParallelism`` tasks (~1.1 CPU-s on 4 cores) for the ids.
     """
     from .encode import decode_blocks
 

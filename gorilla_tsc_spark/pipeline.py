@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from .functions.channels import Channel, default_channels
 from .operators.checkpoint import CheckpointLog, group_key_col, points_group_key_col
 from .operators.encode import (
+    BLOCKS_SCHEMA,
     block_value_column,
     decode_blocks,
     encode_points,
@@ -44,8 +45,9 @@ from .sources.tables import read_tier, write_tier
 
 def read_blocks(spark: SparkSession, warehouse: str) -> DataFrame:
     """Blocks tier: a plain scan (``encode_stage`` stores each block
-    identity once)."""
-    return read_tier(spark, warehouse, "gorilla_blocks")
+    identity once) with the declared ``BLOCKS_SCHEMA``, so building it
+    starts no Spark job."""
+    return read_tier(spark, warehouse, "gorilla_blocks", BLOCKS_SCHEMA)
 
 
 def _commit_staged(spark: SparkSession, log: CheckpointLog, staged_dir: str,
@@ -58,7 +60,8 @@ def _commit_staged(spark: SparkSession, log: CheckpointLog, staged_dir: str,
     simply still pending."""
     files = sorted(f for f in os.listdir(staged_dir) if f.endswith(".parquet"))
     if files:
-        staged = spark.read.parquet(*(os.path.join(staged_dir, f) for f in files))
+        staged = spark.read.schema(BLOCKS_SCHEMA).parquet(
+            *(os.path.join(staged_dir, f) for f in files))
         fresh = log.pending(staged.withColumn("part_key", group_key_col()), "encode")
         log.log_blocks(fresh.drop("part_key"), "encode")
         os.makedirs(store, exist_ok=True)
@@ -138,15 +141,16 @@ def run_pipeline(
     from .functions.channels import agg_channel_names
     points = decode_blocks(written, predictor).where(
         F.col("channel").isin(agg_channel_names(channels)))
-    t1m = rollup_points(points, TIER_MS["1m"], block_value_column())
-    write_tier(t1m, warehouse, "rollup_1m", mode="overwrite")
-    t1m = read_tier(spark, warehouse, "rollup_1m")
-    t1h = cascade(t1m, TIER_MS["1m"], TIER_MS["1h"])
-    write_tier(t1h, warehouse, "rollup_1h", mode="overwrite")
-    t1h = read_tier(spark, warehouse, "rollup_1h")
-    t1d = cascade(t1h, TIER_MS["1h"], TIER_MS["1d"])
-    write_tier(t1d, warehouse, "rollup_1d", mode="overwrite")
-    t1d = read_tier(spark, warehouse, "rollup_1d")
+
+    def write_read(df, tier):
+        # re-read with the schema just written: no inference job
+        write_tier(df, warehouse, tier, mode="overwrite")
+        return read_tier(spark, warehouse, tier, df.schema)
+
+    t1m = write_read(rollup_points(points, TIER_MS["1m"], block_value_column()),
+                     "rollup_1m")
+    t1h = write_read(cascade(t1m, TIER_MS["1m"], TIER_MS["1h"]), "rollup_1h")
+    t1d = write_read(cascade(t1h, TIER_MS["1h"], TIER_MS["1d"]), "rollup_1d")
     log.log_rows([{"stage": "rollup", "part_key": t} for t in ("1m", "1h", "1d")])
 
     # stage G: gap-fill the serving tier
@@ -162,10 +166,10 @@ def run_pipeline(
         F.sum(F.length("payload"))).first()
     if now_ms is None:
         now_ms = 0
-    for tier_name, keep in (("rollup_1m", policy.keep_1m_days),
-                            ("rollup_1h", policy.keep_1h_days),
-                            ("rollup_1d", policy.keep_1d_days)):
-        pruned = apply_retention(read_tier(spark, warehouse, tier_name), now_ms, keep)
+    for tier_name, tier, keep in (("rollup_1m", t1m, policy.keep_1m_days),
+                                  ("rollup_1h", t1h, policy.keep_1h_days),
+                                  ("rollup_1d", t1d, policy.keep_1d_days)):
+        pruned = apply_retention(tier, now_ms, keep)
         write_tier(pruned, warehouse, f"{tier_name}_retained", mode="overwrite")
     log.log_rows([{"stage": "retention", "part_key": "all"}])
 

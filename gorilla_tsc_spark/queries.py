@@ -731,10 +731,6 @@ def q_dedup_jaccard(spark, sf_dir):
     return dedup.jaccard_pairs(_docs(spark, sf_dir))
 
 
-def q_minhash_sigs(spark, sf_dir):
-    return dedup.minhash_signatures(_docs(spark, sf_dir))
-
-
 def q_dedup_lsh(spark, sf_dir):
     return dedup.lsh_pairs(_docs(spark, sf_dir))
 
@@ -2053,11 +2049,6 @@ def _textstat_query(cols_fn):
         return docs.select(
             *[F.expr(sql).alias(name) for name, sql in cols_fn(P.SPARK)])
     return run
-
-
-def _textstat_sql(cols_fn) -> str:
-    cols = ", ".join(f"{sql} AS {name}" for name, sql in cols_fn(P.DUCK))
-    return f"SELECT {cols} FROM documents"
 
 
 # the five text-analysis families gated as ONE wide projection (they

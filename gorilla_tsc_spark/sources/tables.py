@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -53,7 +54,13 @@ def write_tier(df: DataFrame, warehouse: str, tier: str,
     return path
 
 
-def read_tier(spark: SparkSession, warehouse: str, tier: str) -> DataFrame:
+def read_tier(spark: SparkSession, warehouse: str, tier: str,
+              schema: StructType | None = None) -> DataFrame:
+    """Read a tier table.  ``schema`` declares the parquet schema of a
+    table the engine wrote itself: Spark then plans the read without
+    the footer-inference job it runs for every undeclared read.  An
+    Iceberg table carries its schema, so there it is ignored."""
     if _is_iceberg_identifier(warehouse):
         return spark.read.format("iceberg").load(f"{warehouse}.{tier}")
-    return spark.read.parquet(os.path.join(warehouse, tier))
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(os.path.join(warehouse, tier))

@@ -3,7 +3,7 @@
 Usage (cluster):
     spark-submit --py-files engine.zip jobs/encode_rollup_job.py \\
         --input db.transcripts --warehouse s3://lake/gorilla \\
-        [--resume] [--clustered] [--predictor last_value]
+        [--resume] [--predictor last_value]
 
 Usage (sandbox):
     python jobs/encode_rollup_job.py --input /root/testdata/sf0.01 \\

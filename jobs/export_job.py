@@ -47,6 +47,7 @@ def main() -> None:
                          "consumers that don't speak parquet")
     args = ap.parse_args()
 
+    import pyarrow as pa
     from pyspark.sql import functions as F
 
     from gorilla_tsc_spark.operators.retention import read_range
@@ -60,8 +61,8 @@ def main() -> None:
     conv_ids = None
     if args.conv_ids:
         ids = [c.strip() for c in args.conv_ids.split(",") if c.strip()]
-        conv_ids = spark.createDataFrame([(c,) for c in ids],
-                                         "conv_id string")
+        conv_ids = spark.createDataFrame(
+            pa.table({"conv_id": pa.array(ids, pa.string())}))
 
     n_blocks = blocks.count()
     overlapping = blocks.where((F.col("last_ts") >= args.t0_ms)

@@ -329,3 +329,91 @@ def test_registry_exactly_50_all_oracled():
     assert len(q) == 50, len(q)
     assert set(q) == set(o), (sorted(set(q) - set(o)),
                               sorted(set(o) - set(q)))
+
+
+# -- no Python task without data ---------------------------------------------
+# A frame built from a Python list plans an RDD scan (LogicalRDD /
+# ExistingRDD) whose every action runs one Python task per core, and an
+# undeclared parquet read runs a footer-inference job.  The engine pays
+# neither on the tables and lineage frames it builds itself.
+
+RDD_SCAN = ("LogicalRDD", "ExistingRDD")
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+@pytest.fixture(scope="module")
+def small_store(spark, tmp_path_factory):
+    from gorilla_tsc_spark.functions.channels import default_channels
+    from gorilla_tsc_spark.pipeline import run_pipeline
+    from gorilla_tsc_spark.queries import _transcripts
+
+    wh = str(tmp_path_factory.mktemp("local_wh"))
+    run_pipeline(spark, _transcripts(spark, SF).limit(2_000), wh,
+                 channels=default_channels()[:2])
+    return wh
+
+
+def test_fresh_checkpoint_log_builds_local_frames(spark, tmp_path,
+                                                  monkeypatch):
+    """On a fresh warehouse the empty log and the ``log_rows`` frame are
+    local relations, and ``pending`` joins nothing."""
+    from gorilla_tsc_spark.operators.checkpoint import CheckpointLog
+
+    log = CheckpointLog(spark, str(tmp_path))
+    empty = log.read()
+    assert empty.count() == 0
+    assert not any(t in _optimized(empty) for t in RDD_SCAN), _optimized(empty)
+    work = spark.range(3).selectExpr("cast(id AS string) AS part_key")
+    assert "Join" not in _optimized(log.pending(work, "encode"))
+
+    built = []
+    frame = CheckpointLog._frame
+
+    def spy(self, rows):
+        built.append(frame(self, rows))
+        return built[-1]
+
+    monkeypatch.setattr(CheckpointLog, "_frame", spy)
+    log.log_rows([{"stage": "rollup", "part_key": t} for t in ("1m", "1h")])
+    assert len(built) == 1
+    assert not any(t in _optimized(built[0]) for t in RDD_SCAN), \
+        _optimized(built[0])
+    rows = sorted((r.stage, r.part_key, r.status, r.n_points, r.run_id)
+                  for r in log.read().collect())
+    assert rows == [("rollup", t, "ok", 0, log.run_id) for t in ("1h", "1m")]
+
+
+def test_read_blocks_starts_no_job(spark, small_store):
+    """Building the block-store read declares its schema: no
+    footer-inference job runs before an action."""
+    from gorilla_tsc_spark.operators.checkpoint import CheckpointLog
+    from gorilla_tsc_spark.pipeline import read_blocks
+
+    sc = spark.sparkContext
+    sc.setJobGroup("plan_budget_read_blocks", "read_blocks builds no job")
+    try:
+        blocks = read_blocks(spark, small_store)
+        lineage = CheckpointLog(spark, small_store).read()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(
+            "plan_budget_read_blocks"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == [], jobs
+    assert blocks.count() > 0 and lineage.count() > 0
+
+
+def test_compact_shuffle_is_sized_by_aqe(spark, small_store):
+    """With AQE on, compaction's (conv_id, channel) shuffle is coalesced
+    to the size of the store, not run at spark.sql.shuffle.partitions."""
+    from gorilla_tsc_spark.operators.compact import compact_blocks
+    from gorilla_tsc_spark.pipeline import read_blocks
+
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    compacted = compact_blocks(read_blocks(spark, small_store))
+    assert len(compacted.collect()) > 0
+    final = compacted._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in final, final
+    assert "AQEShuffleRead coalesced" in final, final

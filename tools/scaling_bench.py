@@ -270,9 +270,8 @@ host for ANY data-processing job; on a real cluster each node brings
 its own memory system and the per-node work here (≤ {round(r4["n_points"] / 1e6)}M
 points, one shuffle, bounded partitions) is exactly the shape that
 scales by adding nodes. The engine-side scaling levers are in place
-and verified: bucketed shuffle-free encode (`clustered=True`),
-executor-sliced thread pools (ActiveProcessorCount), partition-batched
-kernels, block-metadata rollups.
+and verified: executor-sliced thread pools (ActiveProcessorCount),
+partition-batched kernels, block-metadata rollups.
 
 Raw JSON:
 
