@@ -20,8 +20,7 @@ reported as turns/sec and compressed bytes/point. The remaining
 queries cover the rollup/gap-fill/retention tiers, the decode path,
 relational operators, and the training-data ops.
 
-Scaling evidence (N vs 4N parallelism) lives in tools/scaling_bench.py
-→ BENCH/BASELINE.md.
+Earlier N vs 4N parallelism results are kept in BENCH/BASELINE.md.
 """
 from __future__ import annotations
 
@@ -97,7 +96,7 @@ def main() -> None:
     def run(name: str, fn) -> None:
         # best-of-N with the spread recorded: host timing noise on this
         # box is 2-5x, so the min is the signal and (max-min)/min says
-        # how noisy the samples were (same protocol as scaling_bench).
+        # how noisy the samples were (the BENCH/BASELINE.md protocol).
         samples = []
         for _ in range(max(reps, 1)):
             t0 = time.time()

@@ -12,7 +12,8 @@ When the kernel cannot be built or loaded — no compiler, sandboxed
 filesystem — ``get_lib`` returns None and keeps the reason, and the
 engine's entry points (codec/batch.py) run the scalar reference
 instead, logging ONE warning per process (``warn_fallback``): that
-path is 50-800x slower, so it must be visible, never silent.
+path is 50-800x slower, so it must be visible, never silent.  The
+engine reaches the ``*_many`` functions only through codec/batch.py.
 """
 from __future__ import annotations
 
@@ -32,8 +33,8 @@ _TRIED = False
 _WHY: str | None = None     # why the kernel is not loaded
 _WARNED = False
 
-# decode errors; the scalar reference path (codec/batch.py) raises the
-# same ones so callers see one contract
+# decode errors of every format; the scalar reference paths
+# (codec/batch.py) raise the same ones so callers see one contract
 DECODE_OVERFLOW = ("decode overflow at block {}: decoded past its "
                    "n_points metadata (corrupt or truncated payload)")
 DECODE_MISMATCH = "decode count mismatch vs block metadata"
@@ -281,9 +282,9 @@ def decode_values_many(payloads: list[bytes], expected: np.ndarray, word: int):
         _p(expected, ctypes.c_int64),
         _p(vb, ctypes.c_uint64), _p(cnt, ctypes.c_int64), cap)
     if got < 0:
-        raise ValueError(f"native value decode overflow at block {-1 - got}")
+        raise ValueError(DECODE_OVERFLOW.format(-1 - got))
     if got != cap or not np.array_equal(cnt, expected):
-        raise ValueError("native value decode count mismatch vs metadata")
+        raise ValueError(DECODE_MISMATCH)
     return vb, cnt
 
 

@@ -18,14 +18,19 @@ Checks, per block:
 - ``ok_aggs``    cnt/min/max/sum recomputed from the decoded points
                  equal the block's stored aggregates bit-for-bit
                  (decode order == encode order, so the float sums are
-                 reproducible exactly); NULL aggregates (streaming
-                 seals pre-compaction) pass vacuously.
+                 reproducible exactly).  Every block is checked:
+                 batch, compacted and stream-sealed blocks all carry
+                 their aggregates.  A NULL aggregate reads as NaN, so
+                 it fails unless the recomputed one is NaN too.
 
 ``audit_blocks`` returns one row per audited block (all five booleans
 plus identity), so a warehouse job can write the failures to a
 quarantine table; ``audit_summary`` folds them into one counters row.
 ``sample_pct`` picks a deterministic hash-based sample of blocks —
 at 100 TB the nightly audit reads a few percent, rotating by seed.
+The sample hashes the block identity, and the count-triggered stream
+sealer's chunks of one (conv, day) share it (seq = 0) until compaction:
+those chunks are sampled together and report under one identity.
 
 The audit is read-only and embarrassingly parallel: no shuffle at all
 — metadata checks are scan-side expressions, the decode check is a
@@ -104,13 +109,7 @@ def _decode_flags(pdf: pd.DataFrame, ts: np.ndarray, vb: np.ndarray,
         ok_vals[has] = (_feq(a_min, np.minimum.reduceat(vals, starts))
                         & _feq(a_max, np.maximum.reduceat(vals, starts))
                         & _feq(a_sum, np.add.reduceat(vals, starts)))
-    # a streaming seal pre-compaction (promote_stream_blocks leaves
-    # min/max/sum SQL-NULL by design) checks its count only; a genuine
-    # NaN aggregate is NOT exempt — the JVM-side agg_is_null flag
-    # distinguishes them, since Arrow renders both as NaN here
-    ok_aggs = np.where(pdf["agg_is_null"].to_numpy(bool), ok_cnt,
-                       has & ok_cnt & ok_vals)
-    return ok_decode, ok_aggs
+    return ok_decode, has & ok_cnt & ok_vals
 
 
 def _audit_iter(pdf_iter, predictor: str | None = None):
@@ -177,12 +176,7 @@ def audit_blocks(blocks: DataFrame, sample_pct: float = 100.0,
     cols = ["conv_id", "channel", "kind", "block_start", "seq", "n_points",
             "payload", "first_ts", "last_ts", "agg_cnt", "agg_min",
             "agg_max", "agg_sum"]
-    # SQL NULL vs genuine NaN must be distinguished JVM-side: Arrow
-    # renders both as NaN in a float64 pandas column, and the kernel's
-    # streaming-seal exemption keys on NULLness — a real NaN aggregate
-    # (NaN data values) must still be recomputed and checked
-    return (df.select(*cols, *flags,
-                      F.isnull("agg_min").alias("agg_is_null"))
+    return (df.select(*cols, *flags)
             .mapInPandas(lambda it: _audit_iter(it, predictor),
                          schema=AUDIT_SCHEMA))
 

@@ -84,8 +84,7 @@ def ingest_backfill(blocks: DataFrame, late_transcripts: DataFrame,
                          f"got {on_conflict!r}")
     channels = channels or default_channels()
     late_blocks = (encode_blocks(late_transcripts, channels,
-                                 predictor=predictor,
-                                 shuffle_partitions=shuffle_partitions)
+                                 predictor=predictor)
                    .withColumn("seq", F.lit(LATE_SEQ).cast("int")))
     # every channel of an affected conversation receives late points
     # (channels are per-turn projections), so conv_id-level routing is

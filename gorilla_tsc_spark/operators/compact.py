@@ -19,6 +19,12 @@ native call.  Compacted blocks carry the same per-UTC-day sub-aggregate
 arrays as batch span-auto blocks, so the day tier still rolls up from
 block METADATA with zero decode after compaction.
 
+Streaming-sealed blocks are ordinary store rows (the sealer builds
+them with the same ``_block_frame``), so the sweep reads them as they
+are.  It also ends the one identity clash the store allows: the count
+sealer stamps every chunk of a (conv, day) with seq = 0, and compaction
+merges those chunks into one series of span-auto blocks.
+
 Identity contract (pytest-gated): decode(compact(B)) == decode(B) as a
 point set, and the day tier from compacted metadata equals the day tier
 from the original blocks.
@@ -179,34 +185,3 @@ def compact_blocks(blocks: DataFrame,
     return arranged.mapInPandas(
         lambda it: _compact_iter(it, drop_range, predictor, lww_late_seq),
         schema=BLOCKS_SCHEMA)
-
-
-def promote_stream_blocks(sealed: DataFrame, kind: str = "double") -> DataFrame:
-    """Streaming-sealed block rows (STREAM_BLOCKS_SCHEMA) → the batch
-    BLOCKS_SCHEMA shape, so the compaction maintenance job can sweep
-    the streaming tier directly (the end-to-end lifecycle: watermark
-    seal → small (conv, day) blocks → compact to span-auto blocks).
-
-    Aggregate and day_* cells are left NULL — compaction recomputes
-    every output aggregate from the decoded points; n_bits is the byte
-    length upper bound (exact bit count is not carried by the stream
-    schema and is not read by the compactor).
-    """
-    from pyspark.sql import functions as F
-
-    return sealed.select(
-        "conv_id", "channel", F.lit(kind).alias("kind"), "block_start",
-        F.lit(0).cast("int").alias("seq"), "n_points",
-        (F.length("payload").cast("long") * 8).alias("n_bits"),
-        "payload", "first_ts", "last_ts",
-        F.col("n_points").cast("long").alias("agg_cnt"),
-        F.lit(None).cast("double").alias("agg_min"),
-        F.lit(None).cast("double").alias("agg_max"),
-        F.lit(None).cast("double").alias("agg_sum"),
-        F.lit(None).cast("array<long>").alias("day_buckets"),
-        F.lit(None).cast("array<long>").alias("day_cnt"),
-        F.lit(None).cast("array<double>").alias("day_min"),
-        F.lit(None).cast("array<double>").alias("day_max"),
-        F.lit(None).cast("array<double>").alias("day_sum"),
-        "crc",
-    )

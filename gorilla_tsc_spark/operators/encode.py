@@ -203,13 +203,12 @@ def _encode_channels(chans, column, conv_id, block_ts, seq, starts, counts,
 
 def encode_blocks(transcripts: DataFrame, channels: list[Channel] | None = None,
                   predictor: str | None = None, points_per_block: int = 65_536,
-                  shuffle_partitions: int | None = None,
                   span: str = "day") -> DataFrame:
     """transcripts → gorilla_blocks. One shuffle, keyed (conv_id, day, seq),
     into the packed JVM-grouping kernel (``encode_points``)."""
     channels = channels or default_channels()
     pts = points_for_encode(transcripts, channels, points_per_block, span=span)
-    return encode_points(pts, channels, predictor, shuffle_partitions, span=span)
+    return encode_points(pts, channels, predictor, span=span)
 
 
 def _make_packed_kernel(channels: list[Channel], span: str = "day",
@@ -286,7 +285,6 @@ def pack_blocks(pts: DataFrame, channels: list[Channel]) -> DataFrame:
 
 def encode_points(pts: DataFrame, channels: list[Channel],
                   predictor: str | None = None,
-                  shuffle_partitions: int | None = None,
                   span: str = "day") -> DataFrame:
     """Encode pre-projected point rows (points_for_encode output).
 

@@ -3,8 +3,9 @@ and Swing (piecewise-linear) segment filters + native reconstruction.
 
 The filters are inherently sequential per series (reference
 ``PmcMR.java:10-48``, ``SwingFilter.java:11-59``) → one
-``applyInPandas`` scan per (series) group running the bit-exact kernels
-from codec/lossy.py. Reconstruction is the opposite: pure Spark SQL —
+``applyInPandas`` scan per (series) group calling the codec entry
+points (codec/batch.py: the native kernel, or the bit-exact scalar
+reference of codec/lossy.py). Reconstruction is the opposite: pure Spark SQL —
 ``sequence(t0, t1) + explode`` and ``a*t + b`` — exactly the
 DecompressorPmcMr/DecompressorSwingFilter contract of one value per
 unit timestamp (``DecompressorPmcMr.java:32-47``,
@@ -22,7 +23,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..codec.lossy import pmc_mr_filter, swing_filter
+from ..codec.batch import (decode_values_partition,
+                           encode_lossy32_partition, pmc_partition,
+                           swing_partition)
 
 PMC_SCHEMA = T.StructType([
     T.StructField("series", T.StringType()),
@@ -56,43 +59,27 @@ def _series_points(events: DataFrame) -> DataFrame:
 
 def _pmc_kernel(eps: float):
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..codec import native
         pdf = pdf.sort_values("t", kind="mergesort")
         ts = pdf["t"].to_numpy(np.int64)
-        vs = pdf["v"].to_numpy(np.float32)
         one = np.array([0], np.int64), np.array([len(ts)], np.int64)
-        res = native.pmc_filter_many(*one, ts, vs, eps)
-        if res is not None:
-            t0, t1, vb, _ = res
-            return pd.DataFrame({
-                "series": pdf["series"].iloc[0], "t0": t0, "t1": t1,
-                "value": vb.view(np.float32).astype(np.float64)})
-        segs = pmc_mr_filter(ts, vs, eps)
-        return pd.DataFrame(
-            [(pdf["series"].iloc[0], s.t0, s.t1, float(s.value))
-             for s in segs],
-            columns=[f.name for f in PMC_SCHEMA.fields])
+        t0, t1, vb, _ = pmc_partition(*one, ts, pdf["v"].to_numpy(np.float32),
+                                      eps)
+        return pd.DataFrame({
+            "series": pdf["series"].iloc[0], "t0": t0, "t1": t1,
+            "value": vb.view(np.float32).astype(np.float64)})
     return kernel
 
 
 def _swing_kernel(eps: float):
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..codec import native
         pdf = pdf.sort_values("t", kind="mergesort")
         ts = pdf["t"].to_numpy(np.int64)
-        vs = pdf["v"].to_numpy(np.float32)
         one = np.array([0], np.int64), np.array([len(ts)], np.int64)
-        res = native.swing_filter_many(*one, ts, vs, eps)
-        if res is not None:
-            t0, t1, a, b, _ = res
-            return pd.DataFrame({
-                "series": pdf["series"].iloc[0], "t0": t0, "t1": t1,
-                "a": a, "b": b})
-        segs = swing_filter(ts, vs, eps)
-        return pd.DataFrame(
-            [(pdf["series"].iloc[0], s.t0, s.t1,
-              float(s.line.a), float(s.line.b)) for s in segs],
-            columns=[f.name for f in SWING_SCHEMA.fields])
+        t0, t1, a, b, _ = swing_partition(
+            *one, ts, pdf["v"].to_numpy(np.float32), eps)
+        return pd.DataFrame({
+            "series": pdf["series"].iloc[0], "t0": t0, "t1": t1,
+            "a": a, "b": b})
     return kernel
 
 
@@ -140,30 +127,16 @@ def lossy32_bound(events: DataFrame, log_of_error: int = -3) -> DataFrame:
     decode with the standard 32-bit decoder, report size + max |error|
     (must stay ≤ 2^logOfError). Includes the upstream ``2^space`` XOR
     quirk, so the bound is checked empirically rather than assumed."""
-    from ..codec import native
-    from ..codec.lossy import LossyCompressor32
-    from ..codec.valueonly import Decompressor32
-
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("t", kind="mergesort")
         vals = pdf["v"].to_numpy(np.float32)
         vb = vals.view(np.uint32).astype(np.uint64)
         one = np.array([0], np.int64), np.array([len(vb)], np.int64)
-        res = native.encode_lossy32_many(*one, vb, log_of_error)
-        if res is not None:
-            payload, n_bits = res[0][0], int(res[1][0])
-        else:
-            enc = LossyCompressor32(log_of_error)
-            for v in vals.tolist():
-                enc.add_float(v)
-            enc.close()
-            payload, n_bits = enc.out.to_bytes(), enc.out.total_bits
-        dres = native.decode_values_many([payload], one[1], 32)
-        if dres is not None:
-            got = dres[0].astype(np.uint32).view(np.float32).astype(np.float64)
-        else:
-            got = (Decompressor32(payload).read_all()
-                   .view(np.float32).astype(np.float64))
+        (payload,), (n_bits,) = encode_lossy32_partition(*one, vb,
+                                                          log_of_error)
+        n_bits = int(n_bits)
+        dec, _ = decode_values_partition([payload], one[1], 32)
+        got = dec.astype(np.uint32).view(np.float32).astype(np.float64)
         err = float(np.max(np.abs(got - vals.astype(np.float64)))) if len(got) else 0.0
         return pd.DataFrame([(
             pdf["series"].iloc[0], len(vals), n_bits,

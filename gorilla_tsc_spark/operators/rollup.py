@@ -14,6 +14,12 @@ Scale notes: groupBy(conv_id, channel, bucket) does partial (map-side)
 aggregation before the shuffle — at 10^12 turns the shuffle carries one
 row per (series, bucket), not per point. The 1h/1d tiers re-aggregate
 the 1m tier (tiny input), never the raw points.
+
+Every block row carries its aggregates — batch, compacted and
+stream-sealed alike — so the zero-decode day tier
+(rollup_from_block_meta / rollup_from_day_subaggs) covers the whole
+store.  It groups by (conv, channel, day), so the count sealer's chunks
+that share one block identity recombine like any other blocks.
 """
 from __future__ import annotations
 
@@ -62,25 +68,11 @@ def with_mean(tier: DataFrame) -> DataFrame:
     return tier.withColumn("vmean", F.col("vsum") / F.col("cnt"))
 
 
-def _finalized(blocks: DataFrame) -> DataFrame:
-    """Blocks with materialized aggregates.  Streaming-sealed blocks
-    promoted by compact.promote_stream_blocks carry NULL agg_min/max/
-    sum (only counts); including them would produce a tier whose cnt
-    counts their points while vmin/vmax/vsum silently exclude them
-    (F.sum/min skip nulls).  Excluding them keeps every column of the
-    tier consistent — those points join the tier when the compaction
-    sweep finalizes their blocks."""
-    return blocks.where(F.col("agg_min").isNotNull()
-                        | (F.col("agg_cnt") == 0))
-
-
 def rollup_from_day_subaggs(blocks: DataFrame) -> DataFrame:
     """Day tier from the per-day sub-aggregate arrays on block rows —
     zero decode, valid for ANY span (the archival span='auto' profile's
     day-tier path: multi-day blocks carry one array entry per UTC day
-    touched, written by the encode kernels).  Covers FINALIZED blocks
-    only (see _finalized)."""
-    blocks = _finalized(blocks)
+    touched, written by the encode kernels)."""
     z = blocks.select(
         "conv_id", "channel",
         F.explode(F.arrays_zip(
@@ -110,11 +102,9 @@ def rollup_from_block_meta(blocks: DataFrame) -> DataFrame:
 
     Valid because blocks are aligned to UTC days (operators/encode.py):
     per (conv, channel, day) the block pre-aggregates recombine exactly.
-    Covers FINALIZED blocks only (see _finalized).
     """
     return (
-        _finalized(blocks)
-        .groupBy("conv_id", "channel", F.col("block_start").alias("bucket"))
+        blocks.groupBy("conv_id", "channel", F.col("block_start").alias("bucket"))
         .agg(
             F.sum("agg_cnt").alias("cnt"),
             F.min("agg_min").alias("vmin"),

@@ -9,6 +9,7 @@ encode time and reproduced as an explicit ``idx`` on decode, which is
 what makes the round trip SQL-checkable against a row_number() oracle.
 
 One shuffle keyed by series; blocks are tiny rows; decode is narrow.
+The bits come from the codec entry points (codec/batch.py).
 """
 from __future__ import annotations
 
@@ -20,9 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..codec import native
-from ..codec.valueonly import (Compressor32, Compressor64, Decompressor32,
-                               Decompressor64)
+from ..codec.batch import decode_values_partition, encode_values_partition
 
 #: sub-block cap: a hot series splits into (series, seq) blocks of at
 #: most this many points, so no single task or payload grows unbounded
@@ -73,21 +72,11 @@ def _encode_kernel(word: int):
             bits = vals.view(np.uint64)
         else:
             bits = vals.astype(np.float32).view(np.uint32).astype(np.uint64)
-        # native C kernel when available; else the codec's vectorized
-        # add_array bulk path — both bit-identical to scalar add_bits
-        res = native.encode_values_many(
+        (payload,), (n_bits,) = encode_values_partition(
             np.array([0], np.int64), np.array([len(bits)], np.int64),
             bits, word)
-        if res is not None:
-            payload, n_bits = res[0][0], int(res[1][0])
-        else:
-            enc = Compressor64() if word == 64 else Compressor32()
-            enc.add_array(bits if word == 64 else bits.astype(np.uint32))
-            enc.close()
-            payload = enc.to_bytes()
-            n_bits = enc.out.total_bits
         return pd.DataFrame([(key[0], key[1], word, len(bits),
-                              n_bits, payload, zlib.crc32(payload))],
+                              int(n_bits), payload, zlib.crc32(payload))],
                             columns=[f.name for f in V1_BLOCKS_SCHEMA.fields])
     return kernel
 
@@ -102,39 +91,18 @@ def encode_valueonly(events: DataFrame, word: int = 64,
 
 def _decode_iter(pdf_iter, word: int, cap: int):
     for pdf in pdf_iter:
-        payloads = [bytes(p) for p in pdf["payload"].tolist()]
-        res = native.decode_values_many(
-            payloads, pdf["n_points"].to_numpy(np.int64), word)
-        if res is not None:
-            vb, lens = res
-            if not len(vb):
-                continue
-            idx = (np.repeat(pdf["seq"].to_numpy(np.int64), lens) * cap
-                   + _within_run_index(lens))
-            yield pd.DataFrame({
-                "series": np.repeat(pdf["series"].to_numpy(), lens),
-                "idx": idx,
-                "v": (vb.view(np.float64) if word == 64 else
-                      vb.astype(np.uint32).view(np.float32)),
-            })
+        vb, lens = decode_values_partition(
+            [bytes(p) for p in pdf["payload"].tolist()],
+            pdf["n_points"].to_numpy(np.int64), word)
+        if not len(vb):
             continue
-        # no-compiler fallback: the bit decode is per-block Python (the
-        # format is sequential), but the frame assembly is the same
-        # bulk shape as the native branch — one concatenated value
-        # buffer + vectorized run indexing per Arrow batch, never
-        # per-row pandas access
-        dec_cls = Decompressor64 if word == 64 else Decompressor32
-        vals = [dec_cls(p).read_all() for p in payloads]
-        lens = np.array([len(v) for v in vals], dtype=np.int64)
-        if not lens.sum():
-            continue
-        vb = np.concatenate(vals)
         idx = (np.repeat(pdf["seq"].to_numpy(np.int64), lens) * cap
                + _within_run_index(lens))
         yield pd.DataFrame({
             "series": np.repeat(pdf["series"].to_numpy(), lens),
             "idx": idx,
-            "v": vb.view(np.float64 if word == 64 else np.float32),
+            "v": (vb.view(np.float64) if word == 64 else
+                  vb.astype(np.uint32).view(np.float32)),
         })
 
 

@@ -1,172 +1,130 @@
 """Stateful streaming Gorilla encoder via applyInPandasWithState.
 
 The reference codec is logically a streaming operator with five scalars
-of state per series (SURVEY.md §1.3). The batch engine seals one block
-per (conv, day, seq); the streaming twin accumulates points per
-(conv_id, day) group in state and seals a block when either
+of state per series (SURVEY.md §1.3). The streaming twin buffers the raw
+points of each (conv_id, UTC day) group in state and seals them on one
+of two triggers:
 
-- the group goes quiet for ``timeout_ms`` (processing-time timeout), or
-- the buffered point count reaches ``points_per_block``.
+- event time (``stream_encode_blocks_eventtime``): the day seals as one
+  block once the watermark passes its end — the batch-equivalent policy;
+- count (``stream_encode_blocks``): every full ``points_per_block``
+  chunk seals at once, and the remainder seals when the group has been
+  quiet for ``timeout_ms`` of processing time.
 
-Sealed blocks are bit-identical to the batch encoder's output for the
-same point set: the sealer calls the same codec entry point,
-codec/batch.encode_partition. State carries raw (ts, bits) arrays, NOT
-codec state: Gorilla's 27-bit first delta makes day blocks
-self-contained, and raw buffering keeps state replayable across
-restarts (checkpointed by the state store).
+A sealed block is an ordinary store row: the sealer orders the points
+by the batch encoder's keys (turn_idx, ts) and builds BLOCKS_SCHEMA rows
+with the batch builder, operators/encode._block_frame, aggregates
+included.  An event-time day block is therefore byte-identical to the
+batch block of the same point set, and sealed rows go straight into
+compaction, the audit and the zero-decode day tier.
+
+Count-sealed blocks all carry seq = 0, so the chunks of one (conv, day)
+share the identity (conv_id, channel, block_start, seq) until compaction
+merges them.  Their membership follows arrival batching: the whole
+buffer is sorted by (turn_idx, ts) before it is cut, so membership is
+deterministic when data arrives in turn order, the normal case.
+
+State carries raw (ts, bits, turn) arrays, NOT codec state: Gorilla's
+27-bit first delta makes day blocks self-contained, and raw buffering
+keeps state replayable across restarts (checkpointed by the state store).
 """
 from __future__ import annotations
 
-import zlib
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..codec.batch import encode_partition
+from ..operators.encode import BLOCKS_SCHEMA, DAY_MS, _block_frame
 
-DAY_MS = 86_400_000
-
-STREAM_BLOCKS_SCHEMA = T.StructType([
-    T.StructField("conv_id", T.StringType()),
-    T.StructField("channel", T.StringType()),
-    T.StructField("block_start", T.LongType()),
-    T.StructField("n_points", T.IntegerType()),
-    T.StructField("payload", T.BinaryType()),
-    T.StructField("first_ts", T.LongType()),
-    T.StructField("last_ts", T.LongType()),
-    T.StructField("crc", T.LongType()),
-])
-
-# state: buffered raw points for one (conv_id, day); turn_idx rides
-# along so sealing orders by (turn_idx, ts) exactly like the batch
-# encoder — each sealed payload is deterministic GIVEN its member set.
-# Scope of the determinism claim: the processing-time sealer
-# (make_encode_state_fn) chunks by COUNT, so block MEMBERSHIP depends
-# on arrival batching (buffer is sorted before slicing, so membership
-# is deterministic when data arrives in turn order, the normal case);
-# the event-time sealer (make_eventtime_state_fn) is the
-# batch-equivalent deterministic policy.
 STATE_SCHEMA = T.StructType([
     T.StructField("ts", T.ArrayType(T.LongType())),
     T.StructField("vbits", T.ArrayType(T.LongType())),
     T.StructField("turn", T.ArrayType(T.LongType())),
 ])
 
-INPUT_SCHEMA = T.StructType([
-    T.StructField("conv_id", T.StringType()),
-    T.StructField("day", T.LongType()),
-    T.StructField("ts_ms", T.LongType()),
-    T.StructField("v", T.DoubleType()),
-    T.StructField("turn_idx", T.LongType()),
-])
-
 
 def _seal(conv_id: str, day: int, ts: np.ndarray, vb: np.ndarray,
-          turn: np.ndarray) -> tuple:
-    # (turn_idx, ts) — the batch encoder's sort keys (encode.py kernel)
+          turn: np.ndarray, size: int | None = None) -> pd.DataFrame:
+    """BLOCKS_SCHEMA rows of buffered points in (turn_idx, ts) order,
+    cut into blocks of ``size`` points (one block when None)."""
     order = np.lexsort((ts, turn))
-    ts = ts[order]
-    vb = vb[order]
-    (payload,), _ = encode_partition(
-        np.array([0], np.int64), np.array([len(ts)], np.int64),
-        np.array([day * DAY_MS], np.int64), ts, vb.view(np.uint64))
-    return (conv_id, "len", day * DAY_MS, len(ts), payload,
-            int(ts[0]), int(ts[-1]), zlib.crc32(payload))
+    size = size or len(ts)
+    starts = np.arange(0, len(ts), size, dtype=np.int64)
+    counts = np.minimum(size, len(ts) - starts)
+    return _block_frame(conv_id, "len", "double",
+                        np.full(len(starts), day * DAY_MS, np.int64),
+                        np.zeros(len(starts), np.int32), starts, counts,
+                        ts[order], vb[order].view(np.uint64))
 
 
-def make_encode_state_fn(points_per_block: int = 65_536,
-                         timeout_ms: int = 60_000):
+def _make_state_fn(points_per_block: int | None = None,
+                   timeout_ms: int = 60_000):
+    """The sealer: ``points_per_block=None`` seals each day on the
+    watermark; otherwise full chunks seal at once and the remainder
+    after ``timeout_ms`` of processing-time quiet."""
     def fn(key, pdf_iter: Iterator[pd.DataFrame],
            state: GroupState) -> Iterator[pd.DataFrame]:
         conv_id, day = key[0], int(key[1])
         if state.hasTimedOut:
-            (ts_l, vb_l, tn_l) = state.get
+            buf = [np.asarray(c, np.int64) for c in state.get]
             state.remove()
-            if ts_l:
-                row = _seal(conv_id, day,
-                            np.array(ts_l, np.int64), np.array(vb_l, np.int64),
-                            np.array(tn_l, np.int64))
-                yield pd.DataFrame([row], columns=[f.name for f in
-                                                   STREAM_BLOCKS_SCHEMA.fields])
+            if len(buf[0]):
+                yield _seal(conv_id, day, *buf)
             return
-        ts_l, vb_l, tn_l = (state.get if state.exists else ([], [], []))
-        ts_l = list(ts_l)
-        vb_l = list(vb_l)
-        tn_l = list(tn_l)
-        for pdf in pdf_iter:
-            ts_l.extend(pdf["ts_ms"].astype("int64").tolist())
-            vb_l.extend(pdf["v"].to_numpy(np.float64)
-                        .view(np.int64).tolist())
-            tn_l.extend(pdf["turn_idx"].astype("int64").tolist())
-        rows = []
-        if len(ts_l) >= points_per_block:
-            # sort the WHOLE buffer by the batch keys before slicing,
-            # so chunk membership follows (turn, ts) order rather than
-            # raw arrival order across microbatches
-            order = np.lexsort((np.array(ts_l, np.int64),
-                                np.array(tn_l, np.int64)))
-            ts_l = [ts_l[i] for i in order]
-            vb_l = [vb_l[i] for i in order]
-            tn_l = [tn_l[i] for i in order]
-        while len(ts_l) >= points_per_block:
-            chunk_ts = np.array(ts_l[:points_per_block], np.int64)
-            chunk_vb = np.array(vb_l[:points_per_block], np.int64)
-            chunk_tn = np.array(tn_l[:points_per_block], np.int64)
-            ts_l = ts_l[points_per_block:]
-            vb_l = vb_l[points_per_block:]
-            tn_l = tn_l[points_per_block:]
-            rows.append(_seal(conv_id, day, chunk_ts, chunk_vb, chunk_tn))
-        state.update((ts_l, vb_l, tn_l))
-        state.setTimeoutDuration(timeout_ms)
-        if rows:
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              STREAM_BLOCKS_SCHEMA.fields])
+        parts = [state.get if state.exists else ([], [], [])]
+        parts += [(p["ts_ms"].to_numpy(np.int64),
+                   p["v"].to_numpy(np.float64).view(np.int64),
+                   p["turn_idx"].to_numpy(np.int64)) for p in pdf_iter]
+        ts, vb, tn = (np.concatenate([np.asarray(p[i], np.int64)
+                                      for p in parts]) for i in range(3))
+        sealed = None
+        if points_per_block and len(ts) >= points_per_block:
+            # sort the WHOLE buffer by the batch keys before cutting, so
+            # chunk membership follows (turn, ts) order rather than raw
+            # arrival order across microbatches
+            order = np.lexsort((ts, tn))
+            ts, vb, tn = ts[order], vb[order], tn[order]
+            full = len(ts) - len(ts) % points_per_block
+            sealed = _seal(conv_id, day, ts[:full], vb[:full], tn[:full],
+                           points_per_block)
+            ts, vb, tn = ts[full:], vb[full:], tn[full:]
+        state.update((ts.tolist(), vb.tolist(), tn.tolist()))
+        if points_per_block:
+            state.setTimeoutDuration(timeout_ms)
+        else:
+            # seal when the watermark passes end-of-day; if the group
+            # got (late) data with the watermark already beyond that,
+            # time out on the very next watermark advance instead
+            state.setTimeoutTimestamp(
+                max((day + 1) * DAY_MS, state.getCurrentWatermarkMs() + 1))
+        if sealed is not None:
+            yield sealed
 
     return fn
 
 
-def make_eventtime_state_fn():
-    """Event-time sealer: a (conv_id, day) group's block seals when the
-    stream watermark passes the END OF THAT UTC DAY — the
-    production-faithful policy (a day block is complete once no more
-    in-order data for that day can arrive).  State carries raw points;
-    sealing sorts by (turn_idx, ts) so the payload is bit-identical to
-    the batch encoder for the same point set."""
-    def fn(key, pdf_iter: Iterator[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        conv_id, day = key[0], int(key[1])
-        if state.hasTimedOut:
-            (ts_l, vb_l, tn_l) = state.get
-            state.remove()
-            if ts_l:
-                row = _seal(conv_id, day,
-                            np.array(ts_l, np.int64), np.array(vb_l, np.int64),
-                            np.array(tn_l, np.int64))
-                yield pd.DataFrame([row], columns=[f.name for f in
-                                                   STREAM_BLOCKS_SCHEMA.fields])
-            return
-        ts_l, vb_l, tn_l = (state.get if state.exists else ([], [], []))
-        ts_l = list(ts_l)
-        vb_l = list(vb_l)
-        tn_l = list(tn_l)
-        for pdf in pdf_iter:
-            ts_l.extend(pdf["ts_ms"].astype("int64").tolist())
-            vb_l.extend(pdf["v"].to_numpy(np.float64)
-                        .view(np.int64).tolist())
-            tn_l.extend(pdf["turn_idx"].astype("int64").tolist())
-        state.update((ts_l, vb_l, tn_l))
-        # seal when the watermark passes end-of-day; if the group got
-        # (late) data with the watermark already beyond that, time out
-        # on the very next watermark advance instead
-        day_end = (day + 1) * DAY_MS
-        state.setTimeoutTimestamp(
-            max(day_end, state.getCurrentWatermarkMs() + 1))
-
-    return fn
+def _sealed_blocks(transcripts_stream: DataFrame, fn,
+                   timeout_conf: str, *extra: str) -> DataFrame:
+    ts_ms = F.unix_millis(F.col("ts").cast("timestamp"))
+    pts = transcripts_stream.select(
+        "conv_id",
+        F.floor(ts_ms / DAY_MS).cast("long").alias("day"),
+        ts_ms.alias("ts_ms"),
+        F.length("text").cast("double").alias("v"),
+        F.col("turn_idx").cast("long").alias("turn_idx"),
+        *extra)
+    return pts.groupBy("conv_id", "day").applyInPandasWithState(
+        fn,
+        outputStructType=BLOCKS_SCHEMA,
+        stateStructType=STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=timeout_conf,
+    )
 
 
 def stream_encode_blocks_eventtime(transcripts_stream: DataFrame,
@@ -179,43 +137,15 @@ def stream_encode_blocks_eventtime(transcripts_stream: DataFrame,
     tolerance ``delay``.  Bounded replays need one far-future sentinel
     row to advance the final watermark (same trick as
     rollup_stream.stream_rollup_1m)."""
-    from pyspark.sql import functions as F
-    pts = (transcripts_stream
-           .withWatermark("ts", delay)
-           .select(
-               "conv_id",
-               F.floor(F.unix_millis(F.col("ts").cast("timestamp")) / DAY_MS)
-                .cast("long").alias("day"),
-               F.unix_millis(F.col("ts").cast("timestamp")).alias("ts_ms"),
-               F.length("text").cast("double").alias("v"),
-               F.col("turn_idx").cast("long").alias("turn_idx"),
-               "ts"))
-    return pts.groupBy("conv_id", "day").applyInPandasWithState(
-        make_eventtime_state_fn(),
-        outputStructType=STREAM_BLOCKS_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    return _sealed_blocks(transcripts_stream.withWatermark("ts", delay),
+                          _make_state_fn(),
+                          GroupStateTimeout.EventTimeTimeout, "ts")
 
 
 def stream_encode_blocks(transcripts_stream: DataFrame,
                          points_per_block: int = 65_536,
                          timeout_ms: int = 60_000) -> DataFrame:
     """transcripts stream → sealed Gorilla block stream ('len' channel)."""
-    from pyspark.sql import functions as F
-    pts = transcripts_stream.select(
-        "conv_id",
-        F.floor(F.unix_millis(F.col("ts").cast("timestamp")) / DAY_MS)
-         .cast("long").alias("day"),
-        F.unix_millis(F.col("ts").cast("timestamp")).alias("ts_ms"),
-        F.length("text").cast("double").alias("v"),
-        F.col("turn_idx").cast("long").alias("turn_idx"),
-    )
-    return pts.groupBy("conv_id", "day").applyInPandasWithState(
-        make_encode_state_fn(points_per_block, timeout_ms),
-        outputStructType=STREAM_BLOCKS_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
+    return _sealed_blocks(transcripts_stream,
+                          _make_state_fn(points_per_block, timeout_ms),
+                          GroupStateTimeout.ProcessingTimeTimeout)

@@ -1,6 +1,6 @@
 """The audit kernel's decode flags (operators/audit.py::_audit_iter)
 equal a per-block reference loop on batches that mix NaN data,
-``long``-kind blocks, NULL-aggregate (stream-sealed) blocks and
+``long``-kind blocks, NULL aggregates (checked like any other) and
 tampered metadata — both when the batch decodes in one call and when a
 corrupt member forces per-block isolation.  No Spark: the kernel runs
 on the pandas batches mapInPandas would hand it."""
@@ -30,9 +30,6 @@ def _reference_flags(pdf):
             continue
         ok_decode.append(len(ts) == r.n_points and (
             len(ts) == 0 or (ts[0] == r.first_ts and ts[-1] == r.last_ts)))
-        if r.agg_is_null:
-            ok_aggs.append(r.agg_cnt == len(ts))
-            continue
         vals = (vb.view(np.float64) if r.kind == "double"
                 else vb.view(np.int64).astype(np.float64))
 
@@ -76,13 +73,11 @@ def _batch():
             "first_ts": int(t[0]), "last_ts": int(t[-1]),
             "agg_cnt": len(t), "agg_min": vals.min(), "agg_max": vals.max(),
             "agg_sum": np.add.reduceat(vals, [0])[0],
-            "ok_crc": True, "ok_len": i != 7, "ok_span": i != 8,
-            "agg_is_null": False})
+            "ok_crc": True, "ok_len": i != 7, "ok_span": i != 8})
     pdf = pd.DataFrame(rows)
-    # stream seals: NULL aggregates, one with a wrong count
+    # NULL aggregates (NaN once in pandas), one with a wrong count
     for i in (2, 5):
         pdf.loc[i, ["agg_min", "agg_max", "agg_sum"]] = np.nan
-        pdf.loc[i, "agg_is_null"] = True
     pdf.loc[5, "agg_cnt"] += 1
     pdf.loc[4, "agg_sum"] = np.nextafter(pdf.loc[4, "agg_sum"], np.inf)
     pdf.loc[10, "agg_min"] = np.nan          # NaN agg over NaN-free data
@@ -103,8 +98,8 @@ def test_vectorized_flags_match_loop():
     got = _check(_batch())
     # the batch exercises every outcome
     assert got["ok_aggs"].sum() > 10
-    assert not got.loc[[4, 5, 10], "ok_aggs"].any()
-    assert got.loc[2, "ok_aggs"] and got.loc[13, "ok_aggs"]   # NULL, NaN
+    assert not got.loc[[2, 4, 5, 10], "ok_aggs"].any()
+    assert got.loc[13, "ok_aggs"]                # NaN data, NaN aggs
     assert not got.loc[[11, 14], "ok_decode"].any()
 
 

@@ -117,21 +117,6 @@ def test_decode_crc_verification(spark):
         assert "crc mismatch" in str(e)
 
 
-def test_promote_stream_blocks_then_compact(spark):
-    """STREAM_BLOCKS_SCHEMA-shaped rows promote to the batch shape and
-    compact to the same point set — the streaming-tier sweep path."""
-    from gorilla_tsc_spark.operators.compact import promote_stream_blocks
-
-    blocks = _small_blocks(spark).where(F.col("channel") == "len")
-    stream_shape = blocks.select(
-        "conv_id", "channel", "block_start", "n_points", "payload",
-        "first_ts", "last_ts", "crc")
-    promoted = promote_stream_blocks(stream_shape, kind="double")
-    compacted = compact_blocks(promoted)
-    assert _point_set(compacted) == _point_set(blocks)
-    assert compacted.count() < blocks.count()
-
-
 def test_compact_and_purge_dfcm_store(spark):
     """Compaction and range purge of a DFCM-encoded store must decode
     with the store's predictor: point identity preserved (this used to

@@ -342,3 +342,66 @@ def test_reference_fallback_matches_native(monkeypatch, caplog):
     warnings = [r for r in caplog.records if r.name == native.__name__]
     assert len(warnings) == 1
     assert "disabled by the test" in warnings[0].getMessage()
+
+
+def _variant_results(starts, counts, ts, vb):
+    """Every value-only and lossy entry point over one partition, plus
+    the error each value-only corruption raises."""
+    from gorilla_tsc_spark.codec.batch import (decode_values_partition,
+                                               encode_lossy32_partition,
+                                               encode_values_partition,
+                                               pmc_partition,
+                                               swing_partition)
+    vs = vb.view(np.float64).astype(np.float32)
+    f32 = vs.view(np.uint32).astype(np.uint64)
+    out = {}
+    for word, bits in ((64, vb), (32, f32)):
+        enc = encode_values_partition(starts, counts, bits, word)
+        errors = []
+        for payloads, expected in _corruptions(enc[0], counts):
+            with pytest.raises(ValueError) as e:
+                decode_values_partition(payloads, expected, word)
+            errors.append(str(e.value))
+        out[f"v{word}"] = (enc, decode_values_partition(enc[0], counts, word),
+                           errors)
+    enc = encode_lossy32_partition(starts, counts, f32, -3)
+    out["lossy32"] = (enc, decode_values_partition(enc[0], counts, 32))
+    unit = np.arange(len(ts), dtype=np.int64)
+    out["pmc"] = pmc_partition(starts, counts, unit, vs, 0.5)
+    out["swing"] = swing_partition(starts, counts, unit, vs, 0.5)
+    return out
+
+
+def _assert_same(got, want):
+    if isinstance(got, np.ndarray):
+        assert got.dtype == want.dtype
+        assert np.array_equal(got, want)
+    elif isinstance(got, (tuple, list)) and not isinstance(got, bytes):
+        assert len(got) == len(want)
+        for g, w in zip(got, want):
+            _assert_same(g, w)
+    else:
+        assert got == want
+
+
+def test_variant_reference_fallback_matches_native(monkeypatch, caplog):
+    """The value-only and lossy entry points fall back like the v2
+    ones: with the kernel unloaded they run the scalar reference and
+    return the same payloads, n_bits, decoded words and segments (with
+    the same dtypes), raise the same value-only decode errors, and log
+    exactly one warning."""
+    starts, counts, _, ts, vb = _random_partition(8)
+    want = _variant_results(starts, counts, ts, vb)
+
+    monkeypatch.setattr(native, "_TRIED", True)
+    monkeypatch.setattr(native, "_LIB", None)
+    monkeypatch.setattr(native, "_WHY", "disabled by the test")
+    monkeypatch.setattr(native, "_WARNED", False)
+    with caplog.at_level(logging.WARNING, logger=native.__name__):
+        got = _variant_results(starts, counts, ts, vb)
+    assert got.keys() == want.keys()
+    for name in want:
+        _assert_same(got[name], want[name])
+    warnings = [r for r in caplog.records if r.name == native.__name__]
+    assert len(warnings) == 1
+    assert "disabled by the test" in warnings[0].getMessage()

@@ -159,6 +159,56 @@ def test_stream_encode_blocks_decode(spark, transcripts_dir, tmp_path):
             assert expect[t] == v
 
 
+def test_eventtime_sealed_blocks_are_store_rows(spark, transcripts_dir,
+                                                tmp_path):
+    """Watermark-sealed day blocks are ordinary store rows: equal, row
+    for row and byte for byte, to the batch encoder's blocks of the
+    same points; they audit clean (aggregates included) and compact
+    as they are to the source point set."""
+    from datetime import timedelta
+
+    from gorilla_tsc_spark.operators.audit import audit_blocks, audit_summary
+    from gorilla_tsc_spark.operators.compact import compact_blocks
+    from gorilla_tsc_spark.operators.encode import decode_blocks, encode_blocks
+    from gorilla_tsc_spark.queries import LEN_CHANNEL
+    from gorilla_tsc_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
+    from gorilla_tsc_spark.streaming.encode_stream import (
+        stream_encode_blocks_eventtime)
+
+    batch_t = spark.read.parquet(transcripts_dir)
+    replay = str(tmp_path / "replay_enc")
+    batch_t.write.parquet(replay)
+    max_ts = batch_t.agg(F.max("ts")).first()[0]
+    spark.createDataFrame(
+        [("__sentinel__", 0, "user", "x", None, max_ts + timedelta(days=3))],
+        schema=TRANSCRIPTS_SCHEMA).write.mode("append").parquet(replay)
+    stream = spark.readStream.schema(TRANSCRIPTS_SCHEMA).parquet(replay)
+    q = (stream_encode_blocks_eventtime(stream).writeStream.format("memory")
+         .queryName("sealed_days").outputMode("append")
+         .option("checkpointLocation", str(tmp_path / "ck_sealed"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(180)
+    sealed = (spark.sql("SELECT * FROM sealed_days")
+              .where(F.col("conv_id") != "__sentinel__").cache())
+
+    want = encode_blocks(batch_t, LEN_CHANNEL)
+    assert sealed.count() == want.count() > 0
+    assert sealed.exceptAll(want).count() == 0
+    assert want.exceptAll(sealed).count() == 0
+
+    summary = audit_summary(audit_blocks(sealed)).first().asDict()
+    assert summary.pop("n_blocks") == sealed.count()
+    assert set(summary.values()) == {0}, summary
+
+    got = sorted(tuple(r) for r in decode_blocks(compact_blocks(sealed))
+                 .select("conv_id", "ts_ms", "v_double").collect())
+    src = sorted(tuple(r) for r in batch_t.select(
+        "conv_id", F.unix_millis("ts"),
+        F.length("text").cast("double")).collect())
+    assert got == src
+    sealed.unpersist()
+
+
 def test_stream_heartbeat_matches_batch(spark, transcripts_dir, tmp_path):
     """Every watermark-sealed streaming heartbeat row must bit-equal
     the batch heartbeat_tier row for the same (conv, bucket); a
