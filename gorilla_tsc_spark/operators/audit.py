@@ -28,9 +28,9 @@ plus identity), so a warehouse job can write the failures to a
 quarantine table; ``audit_summary`` folds them into one counters row.
 ``sample_pct`` picks a deterministic hash-based sample of blocks —
 at 100 TB the nightly audit reads a few percent, rotating by seed.
-The sample hashes the block identity, and the count-triggered stream
-sealer's chunks of one (conv, day) share it (seq = 0) until compaction:
-those chunks are sampled together and report under one identity.
+The sample hashes the block identity (conv_id, channel, block_start,
+seq), which is distinct per block: count-sealed stream chunks carry
+the batch encoder's seq = first turn_idx // points_per_block.
 
 The audit is read-only and embarrassingly parallel: no shuffle at all
 — metadata checks are scan-side expressions, the decode check is a

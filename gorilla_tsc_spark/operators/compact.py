@@ -19,11 +19,19 @@ native call.  Compacted blocks carry the same per-UTC-day sub-aggregate
 arrays as batch span-auto blocks, so the day tier still rolls up from
 block METADATA with zero decode after compaction.
 
+The scan, the shuffle and the kernel's Arrow input carry only the six
+columns the kernel reads (``KERNEL_COLS``) plus the sort key
+``first_ts``, which is dropped after the sort.  The 14 metadata
+columns are rebuilt from the decoded points; shipping them would cost
+more than bytes: Spark checks the Arrow batch size after every row,
+and on the day_* list columns, NULL on every day-aligned block, each
+check re-walks every offset written so far, so one batch costs
+O(rows^2) JVM time (docs/ARCHITECTURE.md, the Arrow boundary).
+
 Streaming-sealed blocks are ordinary store rows (the sealer builds
 them with the same ``_block_frame``), so the sweep reads them as they
-are.  It also ends the one identity clash the store allows: the count
-sealer stamps every chunk of a (conv, day) with seq = 0, and compaction
-merges those chunks into one series of span-auto blocks.
+are: count-sealed chunks of one (conv, day) carry the batch seq rule
+and merge here into one series of span-auto blocks.
 
 Identity contract (pytest-gated): decode(compact(B)) == decode(B) as a
 point set, and the day tier from compacted metadata equals the day tier
@@ -37,6 +45,9 @@ from pyspark.sql import DataFrame
 
 from ..codec.batch import decode_partition
 from .encode import BLOCKS_SCHEMA, DAY_MS, GAP_SPLIT_MS, _block_frame, _day_runs
+
+# the kernel's Arrow input: exactly the columns _compact_pdf reads
+KERNEL_COLS = ("conv_id", "channel", "kind", "seq", "n_points", "payload")
 
 
 def _compact_iter(pdf_iter, drop_range=None, predictor=None, lww_seq=None):
@@ -179,9 +190,10 @@ def compact_blocks(blocks: DataFrame,
     # of the kernel costs a fixed ~0.25 CPU-s (4-core host), rows or not
     n = () if shuffle_partitions is None else (shuffle_partitions,)
     arranged = (blocks
-                .select(*[f.name for f in BLOCKS_SCHEMA.fields])
+                .select(*KERNEL_COLS, "first_ts")
                 .repartition(*n, "conv_id", "channel")
-                .sortWithinPartitions("conv_id", "channel", "first_ts", "seq"))
+                .sortWithinPartitions("conv_id", "channel", "first_ts", "seq")
+                .select(*KERNEL_COLS))
     return arranged.mapInPandas(
         lambda it: _compact_iter(it, drop_range, predictor, lww_late_seq),
         schema=BLOCKS_SCHEMA)

@@ -19,7 +19,7 @@ Every block row carries its aggregates — batch, compacted and
 stream-sealed alike — so the zero-decode day tier
 (rollup_from_block_meta / rollup_from_day_subaggs) covers the whole
 store.  It groups by (conv, channel, day), so the count sealer's chunks
-that share one block identity recombine like any other blocks.
+of one day recombine like any other blocks.
 """
 from __future__ import annotations
 

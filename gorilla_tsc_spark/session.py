@@ -39,7 +39,9 @@ def get_spark(
         # arrays — the byte cap is what actually bounds kernel batch
         # memory there (65536 such rows would be tens of GB).  64 MB is
         # Spark 4.1's default; pinned here because the encode kernels
-        # RELY on it.
+        # RELY on it.  The cap means a batch-size check after EVERY row,
+        # which is O(rows so far) on an all-NULL list column: kernels
+        # ship only the columns they read (docs/ARCHITECTURE.md).
         .config("spark.sql.execution.arrow.maxBytesPerBatch", "67108864")
         # parquet scans: allow large splits to amortize task startup
         .config("spark.sql.files.maxPartitionBytes", "134217728")

@@ -18,11 +18,17 @@ included.  An event-time day block is therefore byte-identical to the
 batch block of the same point set, and sealed rows go straight into
 compaction, the audit and the zero-decode day tier.
 
-Count-sealed blocks all carry seq = 0, so the chunks of one (conv, day)
-share the identity (conv_id, channel, block_start, seq) until compaction
-merges them.  Their membership follows arrival batching: the whole
-buffer is sorted by (turn_idx, ts) before it is cut, so membership is
-deterministic when data arrives in turn order, the normal case.
+A count-sealed chunk takes the batch encoder's sub-block rule for its
+seq: its first turn_idx // points_per_block (the event-time sealer's one
+block per day keeps seq = 0).  The whole buffer is sorted by
+(turn_idx, ts) before it is cut, so the chunks cut from one buffer
+start at least points_per_block turns apart and their identities
+(conv_id, channel, block_start, seq) are distinct; where a day's turns
+run contiguously from a multiple of points_per_block, the chunks equal
+the batch encoder's blocks.  Membership follows arrival batching, so it
+is deterministic when data arrives in turn order, the normal case.  A
+turn that arrives after its chunk has sealed lands in a later chunk,
+which may then share that chunk's seq until compaction merges them.
 
 State carries raw (ts, bits, turn) arrays, NOT codec state: Gorilla's
 27-bit first delta makes day blocks self-contained, and raw buffering
@@ -51,14 +57,16 @@ STATE_SCHEMA = T.StructType([
 def _seal(conv_id: str, day: int, ts: np.ndarray, vb: np.ndarray,
           turn: np.ndarray, size: int | None = None) -> pd.DataFrame:
     """BLOCKS_SCHEMA rows of buffered points in (turn_idx, ts) order,
-    cut into blocks of ``size`` points (one block when None)."""
+    cut into blocks of ``size`` points, each with the batch encoder's
+    seq = first turn_idx // size (one block with seq = 0 when None)."""
     order = np.lexsort((ts, turn))
-    size = size or len(ts)
-    starts = np.arange(0, len(ts), size, dtype=np.int64)
-    counts = np.minimum(size, len(ts) - starts)
+    step = size or len(ts)
+    starts = np.arange(0, len(ts), step, dtype=np.int64)
+    counts = np.minimum(step, len(ts) - starts)
+    seq = turn[order][starts] // step if size else np.zeros(len(starts))
     return _block_frame(conv_id, "len", "double",
                         np.full(len(starts), day * DAY_MS, np.int64),
-                        np.zeros(len(starts), np.int32), starts, counts,
+                        seq.astype(np.int32), starts, counts,
                         ts[order], vb[order].view(np.uint64))
 
 
@@ -74,7 +82,7 @@ def _make_state_fn(points_per_block: int | None = None,
             buf = [np.asarray(c, np.int64) for c in state.get]
             state.remove()
             if len(buf[0]):
-                yield _seal(conv_id, day, *buf)
+                yield _seal(conv_id, day, *buf, points_per_block)
             return
         parts = [state.get if state.exists else ([], [], [])]
         parts += [(p["ts_ms"].to_numpy(np.int64),

@@ -279,7 +279,7 @@ def test_family_production_plans(spark):
         spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
-def test_job_read_paths_scan_only(spark, tmp_path_factory):
+def test_job_read_paths_scan_only(spark, small_store):
     """Plan shape of the job read paths over a pipeline-written
     warehouse: the audit and the serve read are plain scans of the
     block store (no hash exchange; the serve read's conv-id broadcast
@@ -287,17 +287,13 @@ def test_job_read_paths_scan_only(spark, tmp_path_factory):
     (conv_id, channel)."""
     import re
 
-    from gorilla_tsc_spark.functions.channels import default_channels
     from gorilla_tsc_spark.operators.audit import audit_blocks
     from gorilla_tsc_spark.operators.compact import compact_blocks
     from gorilla_tsc_spark.operators.retention import read_range
     from gorilla_tsc_spark.operators.rollup import DAY_MS
-    from gorilla_tsc_spark.pipeline import read_blocks, run_pipeline
-    from gorilla_tsc_spark.queries import _transcripts
+    from gorilla_tsc_spark.pipeline import read_blocks
 
-    wh = str(tmp_path_factory.mktemp("plan_wh"))
-    run_pipeline(spark, _transcripts(spark, SF).limit(2_000), wh,
-                 channels=default_channels()[:2])
+    wh = small_store
 
     def hash_exchanges(df):
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -417,3 +413,62 @@ def test_compact_shuffle_is_sized_by_aqe(spark, small_store):
     final = compacted._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in final, final
     assert "AQEShuffleRead coalesced" in final, final
+
+
+# -- a kernel's Arrow input carries only the columns it reads -----------------
+# Spark checks the Arrow batch size after every row it writes, and on a
+# list column that is NULL in every row (the day_* lists of day-aligned
+# blocks) each check re-walks all offsets written so far: O(rows^2) per
+# batch (docs/ARCHITECTURE.md, "The Arrow boundary is the scarce resource").
+
+COMPACT_KERNEL_INPUT = ["conv_id", "channel", "kind", "seq", "n_points",
+                        "payload"]
+
+
+def _kernel_inputs(df) -> list[list[str]]:
+    """Input column names of every Python kernel node in the optimized
+    plan, outermost first."""
+    found = []
+
+    def walk(node):
+        if any(t in node.nodeName() for t in ("Pandas", "Arrow", "Python")):
+            attrs = node.child().output()
+            found.append([attrs.apply(i).name() for i in range(attrs.size())])
+        kids = node.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i))
+
+    walk(df._jdf.queryExecution().optimizedPlan())
+    return found
+
+
+def test_kernels_take_only_the_columns_they_read(spark, small_store):
+    """Compaction (plain, range purge, last-write-wins backfill) ships
+    exactly the six columns its kernel reads, and no job path over the
+    block store hands a ``day_*`` list column to any Python kernel."""
+    import pandas as pd
+
+    from gorilla_tsc_spark.operators.audit import audit_blocks
+    from gorilla_tsc_spark.operators.compact import compact_blocks
+    from gorilla_tsc_spark.operators.encode import decode_blocks
+    from gorilla_tsc_spark.operators.retention import read_range
+    from gorilla_tsc_spark.operators.rollup import DAY_MS
+    from gorilla_tsc_spark.pipeline import read_blocks
+
+    blocks = read_blocks(spark, small_store)
+    t0 = 1_704_672_000_000
+    for compacted in (compact_blocks(blocks),
+                      compact_blocks(blocks, drop_range=(t0, t0 + DAY_MS)),
+                      compact_blocks(blocks, lww_late_seq=1 << 30)):
+        assert _kernel_inputs(compacted) == [COMPACT_KERNEL_INPUT]
+
+    ids = spark.createDataFrame(pd.DataFrame({"conv_id": ["conv00000001"]}))
+    for name, df in (
+            ("compact", compact_blocks(blocks)),
+            ("audit", audit_blocks(blocks)),
+            ("read_range", read_range(blocks, t0, t0 + DAY_MS, conv_ids=ids)),
+            ("decode", decode_blocks(blocks))):
+        inputs = _kernel_inputs(df)
+        assert inputs, name
+        assert not [c for cols in inputs for c in cols
+                    if c.startswith("day_")], (name, inputs)

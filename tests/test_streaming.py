@@ -158,6 +158,30 @@ def test_stream_encode_blocks_decode(spark, transcripts_dir, tmp_path):
         for t, v in zip(ts_dec.tolist(), vals.tolist()):
             assert expect[t] == v
 
+    # each chunk's seq is its first turn_idx // points_per_block (the
+    # batch rule), so no two sealed blocks share an identity; where a
+    # day's turns run contiguously from a multiple of 16, the chunks ARE
+    # the batch encoder's blocks
+    from gorilla_tsc_spark.operators.encode import encode_blocks
+    from gorilla_tsc_spark.queries import LEN_CHANNEL
+    ids = [(r.conv_id, r.channel, r.block_start, r.seq) for r in rows]
+    assert len(set(ids)) == len(ids)
+    day_ms = F.floor(F.unix_millis("ts") / 86_400_000) * 86_400_000
+    aligned = (batch_t.groupBy("conv_id", day_ms.alias("block_start"))
+               .agg(F.min("turn_idx").alias("t0"), F.max("turn_idx").alias("t1"),
+                    F.count(F.lit(1)).alias("n"))
+               .where((F.col("t0") % 16 == 0)
+                      & (F.col("t1") - F.col("t0") + 1 == F.col("n")))
+               .select("conv_id", "block_start"))
+    got = spark.sql("SELECT * FROM gblocks").join(
+        aligned, ["conv_id", "block_start"], "left_semi").cache()
+    want = encode_blocks(batch_t, LEN_CHANNEL, points_per_block=16).join(
+        aligned, ["conv_id", "block_start"], "left_semi")
+    assert got.count() > 0
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    got.unpersist()
+
 
 def test_eventtime_sealed_blocks_are_store_rows(spark, transcripts_dir,
                                                 tmp_path):
