@@ -12,7 +12,10 @@ line is budget-enforced (< ~1900 bytes: progressive field drops, never
 truncation mid-object — round 3's lesson, where one ever-growing line
 outgrew the capture window and the round lost its perf record).  The
 full record (noise spreads, serve/audit/compaction counters, unrounded
-timings) goes to BENCH/DETAIL_r{N}.json instead.
+timings) goes to BENCH/DETAIL_<cores>c_<UTC time>.json instead (or to
+$SPARK_GRAFT_BENCH_DETAIL), so a run never overwrites an earlier
+record and each record names the core count it ran on.  Git ignores
+these files; add one with `git add -f` to keep it.
 
 The headline job is the north-rule pipeline slice: transcripts →
 Gorilla blocks (3 channels) → day-tier rollup from block metadata,
@@ -519,9 +522,10 @@ def main() -> None:
     total = round(sum(timings.values()), 3)
     enc_sec = timings["encode_rollup"]
     here = os.path.dirname(os.path.abspath(__file__))
+    stamp = time.strftime("%Y%m%dT%H%M%SZ", time.gmtime())
     detail_path = os.environ.get(
         "SPARK_GRAFT_BENCH_DETAIL",
-        os.path.join(here, "BENCH", "DETAIL_r5.json"))
+        os.path.join(here, "BENCH", f"DETAIL_{cores}c_{stamp}.json"))
 
     # prior-round timings (recovered/maintained in BENCH/PREV.json) →
     # like-for-like ratio map; keys are stable from r4 on

@@ -187,7 +187,7 @@ def compact_blocks(blocks: DataFrame,
     through untouched.
     """
     # a numbered repartition is never coalesced, and each Python task
-    # of the kernel costs a fixed ~0.25 CPU-s (4-core host), rows or not
+    # of the kernel costs a fixed ~0.1 CPU-s (4-core host), rows or not
     n = () if shuffle_partitions is None else (shuffle_partitions,)
     arranged = (blocks
                 .select(*KERNEL_COLS, "first_ts")

@@ -59,7 +59,8 @@ def read_range(blocks: DataFrame, t0_ms: int, t1_ms: int,
     Build ``conv_ids`` from pandas or a ``pyarrow.Table`` (it then plans
     a ``LocalRelation``).  A frame built from a Python list plans an
     RDD scan: each read then first runs a Python job of
-    ``defaultParallelism`` tasks (~1.1 CPU-s on 4 cores) for the ids.
+    ``defaultParallelism`` tasks for the ids (~0.3 CPU-s on 4 cores in a
+    ``session.get_spark`` session, ~1.2 with the stock PySpark daemon).
     """
     from .encode import decode_blocks
 

@@ -4,12 +4,20 @@ Tuned for the engine's workload shape: wide shuffles keyed by
 (conv_id, day), Arrow-batched Python kernels, AQE for skew/coalescing.
 On a real cluster the same code runs via spark-submit --py-files; only
 master/memory settings change.
+
+Python workers start through ``gorilla_tsc_spark.worker_daemon``, so the
+engine's import root (the checkout or the ``--py-files`` zip the driver
+imported it from) joins ``spark.executorEnv.PYTHONPATH``: a worker
+started from any cwd can import the daemon module.
 """
 from __future__ import annotations
 
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory or zip this package was imported from
+_IMPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -52,6 +60,16 @@ def get_spark(
         # (On a real cluster this maps to executor memory instead.)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
     )
-    for k, v in (extra_conf or {}).items():
+    conf = {
+        # every task of a stock worker re-reads pyspark.zip's directory
+        # (gorilla_tsc_spark/worker_daemon.py)
+        "spark.python.daemon.module": "gorilla_tsc_spark.worker_daemon",
+        **(extra_conf or {}),
+    }
+    paths = [p for p in conf.get("spark.executorEnv.PYTHONPATH", "").split(os.pathsep) if p]
+    if _IMPORT_ROOT not in paths:
+        paths.append(_IMPORT_ROOT)
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(paths)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
